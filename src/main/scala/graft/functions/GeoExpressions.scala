@@ -189,8 +189,9 @@ object geofunctions {
     toColumn(CellEncode(d(lat), d(lng), i(lit(res))))
   def cell_parent(cell: Column, parentRes: Int): Column =
     toColumn(CellParent(l(cell), i(lit(parentRes))))
-  def cell_kring(cell: Column, k: Int): Column =
-    toColumn(CellKRing(l(cell), i(lit(k))))
+  def cell_kring(cell: Column, k: Int): Column = cell_kring(cell, lit(k))
+  def cell_kring(cell: Column, k: Column): Column =
+    toColumn(CellKRing(l(cell), i(k)))
   def cell_x(cell: Column): Column = toColumn(CellXExpr(l(cell)))
   def cell_y(cell: Column): Column = toColumn(CellYExpr(l(cell)))
   def ray_cast_contains(geomWkb: Column, lng: Column, lat: Column): Column =

@@ -49,6 +49,25 @@ object GeomConstructors {
       copy(geom = l, res = r)
   }
 
+  /** cover_cells_within(wkbGeometry, parent, fineRes) → array<long>: the
+    * cells of cover_cells(geometry, fineRes) that lie inside the coarser
+    * cell `parent` (Cell.coverGeometryWithin). */
+  case class CoverCellsWithin(geom: Expression, parent: Expression, fineRes: Expression)
+      extends TernaryExpression {
+    override def first: Expression = geom
+    override def second: Expression = parent
+    override def third: Expression = fineRes
+    override def dataType: DataType = ArrayType(LongType, containsNull = false)
+    override def nullSafeEval(g: Any, p: Any, r: Any): Any =
+      new GenericArrayData(graft.geo.Cell.coverGeometryWithin(
+        g.asInstanceOf[Array[Byte]], p.asInstanceOf[Long], r.asInstanceOf[Int]))
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      defineCodeGen(ctx, ev, (g, p, r) =>
+        s"new org.apache.spark.sql.catalyst.util.GenericArrayData(graft.geo.Cell.coverGeometryWithin($g, $p, $r))")
+    override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression) =
+      copy(geom = a, parent = b, fineRes = c)
+  }
+
   /** geom_envelope(wkb) → struct<xmin,ymin,xmax,ymax> — the bbox struct the
     * reference stamps on every feature (overturemaestro/_generate_bbox_index
     * .py:108-110); used to materialize min/max-prunable bbox columns. */
@@ -81,6 +100,11 @@ object GeomConstructors {
   def cover_cells(geomWkb: Column, res: Int): Column = {
     import org.apache.spark.sql.functions.lit
     toColumn(CoverCells(toExpression(geomWkb), toExpression(lit(res))))
+  }
+  def cover_cells_within(geomWkb: Column, parent: Column, fineRes: Int): Column = {
+    import org.apache.spark.sql.functions.lit
+    toColumn(CoverCellsWithin(toExpression(geomWkb), toExpression(parent.cast(LongType)),
+      toExpression(lit(fineRes))))
   }
   def geom_envelope(geomWkb: Column): Column = toColumn(GeomEnvelope(toExpression(geomWkb)))
 }

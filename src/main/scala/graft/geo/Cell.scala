@@ -161,12 +161,50 @@ object Cell {
       val (x, y) = Wkb.readPoint(wkb)
       return Array(encode(y, x, res))
     }
-    val (xmin, ymin, xmax, ymax) = Wkb.envelope(wkb)
-    val polys = Wkb.readPolygons(wkb)
-    coverBBox(xmin, ymin, xmax, ymax, res).filter { c =>
-      val (cxmin, cymin, cxmax, cymax) = boundsOf(c)
-      cellMayIntersect(polys, cxmin, cymin, cxmax, cymax)
+    val n = 1L << res
+    coverWithin(wkb, res, 0L, n - 1, 0L, n - 1)
+  }
+
+  /** Exactly the cells of `coverGeometry(wkb, fineRes)` whose ancestor is
+    * `parent` (same cells, same order), found without the full fine cover:
+    * only the parent's 4^(fineRes - res(parent)) children that meet the
+    * geometry's envelope are tested, in integer grid space. The adaptive
+    * join uses it to cover a polygon inside each hot cell once. */
+  def coverGeometryWithin(wkb: Array[Byte], parent: Long, fineRes: Int): Array[Long] = {
+    val shift = fineRes - resolution(parent)
+    require(shift >= 0, s"fineRes $fineRes < parent res ${resolution(parent)}")
+    if (Wkb.geomType(wkb) == Wkb.Point) {
+      val (x, y) = Wkb.readPoint(wkb)
+      val c = encode(y, x, fineRes)
+      return if (Cell.parent(c, resolution(parent)) == parent) Array(c) else Array.emptyLongArray
     }
+    val x0 = cellX(parent) << shift; val y0 = cellY(parent) << shift
+    val side = 1L << shift
+    coverWithin(wkb, fineRes, x0, x0 + side - 1, y0, y0 + side - 1)
+  }
+
+  /** The geometry's bbox cover at `res`, clipped to grid columns
+    * [xlo, xhi] and rows [ylo, yhi], minus the cells that cannot meet it. */
+  private def coverWithin(wkb: Array[Byte], res: Int,
+                          xlo: Long, xhi: Long, ylo: Long, yhi: Long): Array[Long] = {
+    val (xmin, ymin, xmax, ymax) = Wkb.envelope(wkb)
+    val x0 = math.max(lngToX(xmin, res), xlo); val x1 = math.min(lngToX(math.nextDown(xmax), res), xhi)
+    val y0 = math.max(latToY(ymin, res), ylo); val y1 = math.min(latToY(math.nextDown(ymax), res), yhi)
+    if (x0 > x1 || y0 > y1) return Array.emptyLongArray
+    val polys = Wkb.readPolygons(wkb)
+    val out = new ArrayBuffer[Long]()
+    var y = y0
+    while (y <= y1) {
+      var x = x0
+      while (x <= x1) {
+        val c = fromXY(x, y, res)
+        val (cxmin, cymin, cxmax, cymax) = boundsOf(c)
+        if (cellMayIntersect(polys, cxmin, cymin, cxmax, cymax)) out += c
+        x += 1
+      }
+      y += 1
+    }
+    out.toArray
   }
 
   /** Conservative cell-rect vs polygon intersection: true if any polygon

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import graft.functions.geofunctions._
 import graft.functions.GeomConstructors._
@@ -72,7 +73,10 @@ object SpatialJoin {
     * is shuffle-partition balance when the polygon side is too big to
     * broadcast. Cost: one extra aggregate over the points (at 100 TB this
     * statistic comes from the cell index, not a fresh scan — pass
-    * `cellCounts` to reuse it). */
+    * `cellCounts` to reuse it), and on the polygon side one coarse cover
+    * plus, per (polygon, hot cell) pair, a test of at most the hot cell's
+    * 4^splitLevels children (`cover_cells_within`) — proportional to the
+    * replicated hot region, never to a polygon's whole fine cover. */
   def pointsInPolygonsAdaptive(points: DataFrame, polys: DataFrame, res: Int,
                                hotThreshold: Long, splitLevels: Int = 2,
                                latCol: String = "lat", lngCol: String = "lng",
@@ -104,20 +108,17 @@ object SpatialJoin {
         when(col("_hot").isNotNull, cell_encode(col(latCol), col(lngCol), fineRes))
           .otherwise(col("_cell")))
       .drop("_hot")
-    // polygon side: coarse cover everywhere + fine cover inside hot cells
-    val polyCoarse = polys
+    // polygon side, one pass: a cold coarse cell is its own join key; a hot
+    // one is replaced by the polygon's fine cells inside it
+    val polyCells = polys
       .withColumn("_cell", explode(cover_cells(col(geomCol), res)))
       .join(broadcast(hot.withColumn("_hot", lit(true))), Seq("_cell"), "left")
-    val polyCold = polyCoarse.where(col("_hot").isNull)
-      .withColumn("_jcell", col("_cell")).drop("_hot")
-    val polyHot = polyCoarse.where(col("_hot").isNotNull)
-      .withColumn("_fine", explode(cover_cells(col(geomCol), fineRes)))
-      // keep only fine cells whose coarse ancestor is this hot cell
-      .where(cell_parent(col("_fine"), res) === col("_cell"))
-      .withColumn("_jcell", col("_fine")).drop("_hot", "_fine")
-    val polyCells = polyCold.unionByName(polyHot)
+      .withColumn("_jcell", explode(
+        when(col("_hot").isNull, array(col("_cell")))
+          .otherwise(cover_cells_within(col(geomCol), col("_cell"), fineRes))))
+      .drop("_hot", "_cell")
     val rhs = if (broadcastPolys) broadcast(polyCells) else polyCells
-    flagged.join(rhs.drop("_cell"), Seq("_jcell"))
+    flagged.join(rhs, Seq("_jcell"))
       .where(ray_cast_contains(col(geomCol), col(lngCol), col(latCol)))
       .drop("_jcell", "_cell")
   }
@@ -182,20 +183,29 @@ object SpatialJoin {
   }
 
   /** kNN join via expanding k-ring search (SURVEY.md §2.3 J-row "kNN") —
-    * FULLY DISTRIBUTED: the query side is never collected. Each round:
-    *   1. unresolved queries generate their next ring batch of probe cells
-    *      with the `CellKRing` generator expression (narrow);
+    * FULLY DISTRIBUTED: the query side is never collected. Every
+    * unresolved query carries its ring window `[_r0, _r1]` as data, so the
+    * rounds differ in their inputs only: from the second round on each
+    * runs the same plan and reuses its generated code. Each round:
+    *   1. unresolved queries generate the cells at Chebyshev distance
+    *      `_r0.._r1` with the `CellKRing` generator expression (narrow);
     *   2. ONE equi-join against the cell-encoded points (probe side
     *      broadcast while small, shuffle join when the probe explodes);
-    *   3. per-query top-k trim (window) with lineage truncation;
-    *   4. distributed termination test: a query resolves when its current
-    *      k-th distance ≤ the minimum possible distance of anything in an
-    *      unexplored ring (latitude/longitude separation bound, evaluated
-    *      as expressions); resolved queries leave via an anti-join.
-    * The only driver synchronization is the scalar `count()` of unresolved
-    * queries per round (log-many rounds — ring batches double). Falls back
-    * to a full scan for queries unresolved after `maxRings` (correct
-    * everywhere incl. poles).
+    *   3. ONE window pass over the accumulated and the new candidates
+    *      ranks each query's candidates (`knn_rank`) and trims to the top
+    *      k; the result is checkpointed, truncating the lineage;
+    *   4. resolution test, ONE left join of the unresolved queries with
+    *      their rank-k rows: a query resolves when its k-th distance ≤ the
+    *      minimum possible distance of anything beyond ring `_r1`
+    *      (latitude/longitude separation bound, evaluated as expressions);
+    *      the rest move their window out (×4 wider) and are checkpointed.
+    * Driver synchronization per round: the candidates' eager checkpoint
+    * and the one job that both materializes the unresolved queries'
+    * checkpoint and counts them (log-many rounds — ring batches grow ×4).
+    * Each superseded checkpoint is released as soon as its successor is
+    * materialized, so only the result's checkpoint outlives the call.
+    * Falls back to a full scan for queries unresolved after `maxRings`
+    * (correct everywhere incl. poles).
     *
     * Output: query columns + point columns + `dist_m` + `knn_rank` (1..k),
     * ties broken by `tieCol` ascending for determinism. */
@@ -211,66 +221,72 @@ object SpatialJoin {
 
     val pts = points.withColumn("_cell", cell_encode(col(latCol), col(lngCol), res))
       .cache() // re-probed every round; at scale this is the cell-indexed table itself
+    // Ring batches grow geometrically, 2, 8, 32, … rings per round (×4
+    // growth: each driver round costs a fixed ~0.5 s of job overhead, so
+    // fewer-but-wider rounds win; over-probing is bounded by the top-k
+    // trim). Round 1 covers rings 0-1 — at any realistic density the k
+    // nearest sit within one ring of the query cell, so most queries
+    // resolve one full round earlier than a ring-0-only start.
     var unresolved = queries.select(
         col(qKeyCol).cast("long").as("_qid"),
         col(qLatCol).cast("double").as("_qlat"),
         col(qLngCol).cast("double").as("_qlng"))
       .withColumn("_qcell", cell_encode(col("_qlat"), col("_qlng"), res))
-      .localCheckpoint(eager = true)
+      .withColumn("_r0", lit(0))
+      .withColumn("_r1", lit(math.min(1, maxRings)))
+      .localCheckpoint(eager = false)
+    var remaining = countCheckpoint(unresolved)
     val distC = haversine_m(col("_qlat"), col("_qlng"), col(latCol), col(lngCol))
     val w = Window.partitionBy(col("_qid")).orderBy(col("_dist").asc, col(tieCol).asc)
+    def topK(df: DataFrame): DataFrame =
+      df.withColumn("knn_rank", row_number().over(w)).where(col("knn_rank") <= k)
 
     // schema-stable empty seed (an empty query side legally yields an
     // empty result — S9 semantics — instead of throwing)
-    var acc: DataFrame = pts.limit(0)
+    var acc: DataFrame = topK(pts.limit(0)
       .join(unresolved.limit(0)
         .select(col("_qid"), col("_qlat"), col("_qlng"), col("_qcell").as("_cell")),
         Seq("_cell"))
-      .withColumn("_dist", distC)
-    var r = 0          // first unprobed ring
-    var batchRings = 2 // geometric batching: 2, 8, 32, … rings per round
-                       // (×4 growth: each driver round costs a fixed ~0.5 s
-                       // of job overhead, so fewer-but-wider rounds win;
-                       // over-probing is bounded by the top-k trim. Round 1
-                       // covers rings 0-1 — at any realistic density the
-                       // k nearest sit within one ring of the query cell,
-                       // so most queries resolve one full round earlier
-                       // than the ring-0-only start; results are identical,
-                       // only the probe extent per round changes)
-    var remaining = unresolved.count()
+      .withColumn("_dist", distC))
+    // the driver's mirror of the window every unresolved row carries
+    var r = 0
+    var batchRings = 2
     while (remaining > 0 && r <= maxRings) {
       val rEnd = math.min(r + batchRings - 1, maxRings)
-      // cells at Chebyshev distance in [r, rEnd] (disjoint from prior rounds)
-      val ringCells =
-        if (r == 0) cell_kring(col("_qcell"), rEnd)
-        else array_except(cell_kring(col("_qcell"), rEnd), cell_kring(col("_qcell"), r - 1))
+      // cells at Chebyshev distance in [_r0, _r1], disjoint from prior
+      // rounds (the k-ring of -1 is empty)
+      val ringCells = array_except(cell_kring(col("_qcell"), col("_r1")),
+        cell_kring(col("_qcell"), col("_r0") - 1))
       val probe = unresolved
         .withColumn("_cell", explode(ringCells))
         .select(col("_qid"), col("_qlat"), col("_qlng"), col("_cell"))
       // broadcast while the probe is dimension-sized; a late-round probe of
       // many unresolved queries × a wide ring goes through the shuffle join
       val ringCellBound = (2L * rEnd + 1) * (2L * rEnd + 1)
-      val rhs = if (remaining * ringCellBound <= 2000000L) broadcast(probe) else probe
+      val small = remaining * ringCellBound <= 2000000L
+      val rhs = if (small) broadcast(probe) else probe
       val cand = pts.join(rhs, Seq("_cell")).withColumn("_dist", distC)
-      acc = acc.unionByName(cand)
-      // keep only per-query top-k so the accumulator stays small
-      acc = acc.withColumn("_rn", row_number().over(w)).where(col("_rn") <= k).drop("_rn")
-        .localCheckpoint(eager = true) // truncate the growing lineage per round
-      // distributed resolution test: a point outside rings ≤ rEnd is ≥ rEnd
-      // cell-widths away in lat OR lng grid coordinates (its cell is at
-      // Chebyshev distance ≥ rEnd+1; worst case facing cell edges).
-      val latBand = least(lit(90.0), abs(col("_qlat")) + lit((rEnd + 1) * cellLatDeg))
-      val lngMeters = lit(rEnd * cellLngDeg * 110574.0) *
-        greatest(cos(radians(latBand)), lit(0.0))
-      val bound = least(lit(rEnd * minCellLatMeters), lngMeters)
-      val kth = acc.groupBy(col("_qid"))
-        .agg(count(lit(1)).as("_n"), max(col("_dist")).as("_kth"))
-      val resolved = unresolved.join(kth, Seq("_qid"))
-        .where(col("_n") >= k && col("_kth") <= bound)
-        .select(col("_qid"))
-      unresolved = unresolved.join(resolved, Seq("_qid"), "left_anti")
-        .localCheckpoint(eager = true)
-      remaining = unresolved.count() // the per-round driver sync: one scalar
+      val superseded = acc
+      acc = topK(acc.drop("knn_rank").unionByName(cand)).localCheckpoint(eager = true)
+      release(superseded)
+      // a point outside rings ≤ _r1 is ≥ _r1 cell-widths away in lat OR lng
+      // grid coordinates (its cell is at Chebyshev distance ≥ _r1+1; worst
+      // case facing cell edges)
+      val r1 = col("_r1")
+      val latBand = least(lit(90.0), abs(col("_qlat")) + (r1 + 1) * cellLatDeg)
+      val lngMeters = r1 * cellLngDeg * 110574.0 * greatest(cos(radians(latBand)), lit(0.0))
+      val bound = least(r1 * minCellLatMeters, lngMeters)
+      // at most one row per unresolved query: smaller than the probe
+      val kth = acc.where(col("knn_rank") === k).select(col("_qid"), col("_dist").as("_kth"))
+      val answered = unresolved
+      unresolved = unresolved
+        .join(if (small) broadcast(kth) else kth, Seq("_qid"), "left")
+        .where(!coalesce(col("_kth") <= bound, lit(false)))
+        .select(col("_qid"), col("_qlat"), col("_qlng"), col("_qcell"), (r1 + 1).as("_r0"),
+          least(r1 + (r1 - col("_r0") + 1) * 4, lit(maxRings)).as("_r1"))
+        .localCheckpoint(eager = false)
+      remaining = countCheckpoint(unresolved)
+      release(answered)
       r = rEnd + 1
       batchRings *= 4
     }
@@ -279,20 +295,32 @@ object SpatialJoin {
       // Their ring-probed partial candidates are dropped first — the full
       // scan re-covers them (otherwise they'd appear twice). Trimmed to
       // top-k and materialized so the expensive cross join runs once.
-      val cand = pts.crossJoin(broadcast(unresolved.drop("_qcell")))
-        .withColumn("_dist", distC)
-        .withColumn("_rn", row_number().over(w)).where(col("_rn") <= k).drop("_rn")
+      val cand = topK(pts
+        .crossJoin(broadcast(unresolved.select(col("_qid"), col("_qlat"), col("_qlng"))))
+        .withColumn("_dist", distC))
+      val superseded = acc
       acc = acc.join(unresolved.select(col("_qid")), Seq("_qid"), "left_anti")
         .unionByName(cand.select(acc.columns.map(col): _*))
         .localCheckpoint(eager = true)
+      release(superseded)
     }
-    // acc is materialized (checkpointed) — the probe cache can go. Rounds'
-    // superseded checkpoint blocks are reclaimed by the ContextCleaner as
-    // their RDDs become unreachable.
-    pts.unpersist()
-    acc.withColumn("knn_rank", row_number().over(w)).where(col("knn_rank") <= k)
-      .withColumnRenamed("_qid", qKeyCol)
+    release(unresolved)
+    pts.unpersist() // acc is materialized: the probe cache can go
+    acc.withColumnRenamed("_qid", qKeyCol)
       .withColumnRenamed("_dist", "dist_m")
       .drop("_cell", "_qlat", "_qlng")
+  }
+
+  /** Row count of a DataFrame made by `localCheckpoint(eager = false)`,
+    * from one job over the checkpoint's RDD, which also materializes it. */
+  private def countCheckpoint(cp: DataFrame): Long =
+    cp.queryExecution.logical.asInstanceOf[LogicalRDD].rdd.count()
+
+  /** Drops the blocks of a DataFrame made by `localCheckpoint` (whose plan
+    * is the LogicalRDD over the checkpointed RDD); anything else is left
+    * alone. Only for checkpoints no live plan still reads. */
+  private def release(df: DataFrame): Unit = df.queryExecution.logical match {
+    case l: LogicalRDD => l.rdd.unpersist(blocking = false)
+    case _ =>
   }
 }

@@ -65,6 +65,58 @@ class GeoPropertySpec extends AnyFunSuite {
     })
   }
 
+  /** coverGeometryWithin(g, p, fine) must be coverGeometry(g, fine) cut to
+    * p's descendants, in the same order, for every parent p (all parents
+    * at one resolution). */
+  private def withinMatches(wkb: Array[Byte], parents: Iterable[Long], fine: Int): Boolean = {
+    val res = Cell.resolution(parents.head)
+    val byParent = Cell.coverGeometry(wkb, fine).toSeq.groupBy(Cell.parent(_, res))
+    parents.forall { p =>
+      Cell.coverGeometryWithin(wkb, p, fine).toSeq == byParent.getOrElse(p, Seq.empty)
+    }
+  }
+
+  test("coverGeometryWithin = coverGeometry filtered to the parent, on generated polygons") {
+    check(Prop.forAll(genRing, Gen.chooseNum(2, 8), Gen.chooseNum(0, 3)) { (ring, res, split) =>
+      val wkb = Wkb.writePolygon(Array(ring))
+      // every coarse cell the polygon's cover touches, and their neighbours
+      val parents = Cell.coverGeometry(wkb, res).flatMap(Cell.kRing(_, 1)).distinct
+      withinMatches(wkb, parents, res + split)
+    }, n = 200)
+  }
+
+  test("coverGeometryWithin: envelopes on fine-cell edges, points, disjoint parents") {
+    // boxes whose four edges lie exactly on fine-grid lines
+    check(Prop.forAll(Gen.chooseNum(3, 7), Gen.chooseNum(1, 3), Gen.chooseNum(0L, 1L << 20),
+      Gen.chooseNum(0L, 1L << 20), Gen.chooseNum(1, 4), Gen.chooseNum(1, 4)) {
+      (res, split, xr, yr, w, h) =>
+        val fine = res + split
+        val n = 1L << fine
+        val x0 = xr % (n - w); val y0 = yr % (n - h)
+        def lng(x: Long) = x * 360.0 / n - 180.0
+        def lat(y: Long) = y * 180.0 / n - 90.0
+        val wkb = Wkb.box(lng(x0), lat(y0), lng(x0 + w), lat(y0 + h))
+        val parents = Cell.coverBBox(lng(x0), lat(y0), lng(x0 + w), lat(y0 + h), res)
+          .flatMap(Cell.kRing(_, 1)).distinct
+        withinMatches(wkb, parents, fine)
+    })
+    check(Prop.forAll(genLat, genLng, Gen.chooseNum(1, 12), Gen.chooseNum(0, 4)) {
+      (lat, lng, res, split) =>
+        val wkb = Wkb.writePoint(lng, lat)
+        withinMatches(wkb, Cell.kRing(Cell.encode(lat, lng, res), 1), res + split)
+    })
+    // a parent disjoint from the envelope yields nothing
+    check(Prop.forAll(genRing, Gen.chooseNum(2, 8), Gen.chooseNum(0, 3), genLat, genLng) {
+      (ring, res, split, lat, lng) =>
+        val wkb = Wkb.writePolygon(Array(ring))
+        val (xmin, ymin, xmax, ymax) = Wkb.envelope(wkb)
+        val p = Cell.encode(lat, lng, res)
+        val (pxmin, pymin, pxmax, pymax) = Cell.boundsOf(p)
+        val disjoint = pxmax < xmin || pxmin > xmax || pymax < ymin || pymin > ymax
+        !disjoint || Cell.coverGeometryWithin(wkb, p, res + split).isEmpty
+    })
+  }
+
   test("hilbert xy2d: bijective on the full order-5 grid, in range for random cells") {
     val order = 5
     val n = 1 << order

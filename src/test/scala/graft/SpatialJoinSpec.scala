@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.SpatialJoin
-import graft.geo.{Geo, Wkb}
+import graft.geo.{Cell, Geo, Wkb}
 
 /** Join correctness against brute-force oracles on a SKEWED synthetic
   * fixture (80% of points clustered around 5 "megacity" centers — the
@@ -80,20 +80,55 @@ class SpatialJoinSpec extends SparkTestBase {
     assert(hotCount >= 3, s"fixture should be skewed, hot cells = $hotCount")
   }
 
-  test("knnJoin matches brute-force top-k (skewed data, query near and far from clusters)") {
-    val queries = Seq((0L, 51.4, -0.2), (1L, 0.0, 0.0), (2L, 35.8, 139.6), (3L, -80.0, 170.0))
-      .toDF("q_id", "qlat", "qlng")
-    val k = 7
-    val got = SpatialJoin.knnJoin(queries, points, k = k, res = 7,
-      qKeyCol = "q_id", tieCol = "pid")
+  private def bruteKnn(q: Seq[(Long, Double, Double)], k: Int): Map[Long, Seq[Long]] =
+    q.map { case (qid, qlat, qlng) =>
+      qid -> pts.map { case (pid, lat, lng) => (Geo.haversineM(qlat, qlng, lat, lng), pid) }
+        .sortBy(identity).take(k).map(_._2)
+    }.toMap
+
+  private def kthDistance(qlat: Double, qlng: Double, k: Int): Double =
+    pts.map { case (_, lat, lng) => Geo.haversineM(qlat, qlng, lat, lng) }.sorted.apply(k - 1)
+
+  private def knnIds(q: Seq[(Long, Double, Double)], k: Int, res: Int,
+                     maxRings: Int = 64): Map[Long, Seq[Long]] =
+    SpatialJoin.knnJoin(q.toDF("q_id", "qlat", "qlng"), points, k = k, res = res,
+      qKeyCol = "q_id", tieCol = "pid", maxRings = maxRings)
       .select($"q_id", $"knn_rank", $"pid").as[(Long, Int, Long)].collect()
       .groupBy(_._1).view.mapValues(_.sortBy(_._2).map(_._3).toSeq).toMap
-    val exp = Seq((0L, 51.4, -0.2), (1L, 0.0, 0.0), (2L, 35.8, 139.6), (3L, -80.0, 170.0)).map {
-      case (qid, qlat, qlng) =>
-        qid -> pts.map { case (pid, lat, lng) => (Geo.haversineM(qlat, qlng, lat, lng), pid) }
-          .sortBy(identity).take(k).map(_._2)
-    }.toMap
-    assert(got == exp)
+
+  test("knnJoin matches brute-force top-k (skewed data, query near and far from clusters)") {
+    val q = Seq((0L, 51.4, -0.2), (1L, 0.0, 0.0), (2L, 35.8, 139.6), (3L, -80.0, 170.0))
+    assert(knnIds(q, k = 7, res = 7) == bruteKnn(q, k = 7))
+  }
+
+  test("knnJoin rounds reuse one plan: a many-round call compiles almost no new code") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    def compiles[T](body: => T): (T, Long) = {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val out = body
+      (out, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0)
+    }
+    val k = 7; val res = 9
+    val near = Seq((0L, 51.5, -0.1))  // inside a city cluster: one round
+    val far = Seq((1L, 0.0, -150.0))  // mid-Pacific: background points only
+    // round 2 cannot resolve a query whose k-th neighbour lies beyond the
+    // bound of rings 0..9, so the far query needs at least 3 rounds
+    assert(kthDistance(0.0, -150.0, k) > 9 * 180.0 / (1 << res) * 110574.0)
+    assert(compiles(knnIds(near, k, res))._1 == bruteKnn(near, k))
+    val (got, n) = compiles(knnIds(far, k, res))
+    assert(got == bruteKnn(far, k))
+    // round 2's plan is new; every later round runs the same plan
+    assert(n <= 4, s"the many-round call compiled $n classes")
+  }
+
+  test("knnJoin with a tiny maxRings takes the full-scan fallback and stays exact") {
+    val q = Seq((0L, 0.0, -150.0), (1L, -80.0, 170.0), (2L, 51.4, -0.2))
+    val k = 7; val res = 7
+    // rings 0..1 at res 7 reach at most 2 cells out: the first two queries'
+    // k-th neighbours lie farther, so they can only come from the fallback
+    val reach = math.hypot(2 * 360.0 / (1 << res), 2 * 180.0 / (1 << res)) * 111195.0
+    assert(kthDistance(0.0, -150.0, k) > reach && kthDistance(-80.0, 170.0, k) > reach)
+    assert(knnIds(q, k, res, maxRings = 1) == bruteKnn(q, k))
   }
 
   test("knnJoin handles a 10^4-row query side fully distributed (no driver collect)") {
@@ -200,6 +235,29 @@ class SpatialJoinSpec extends SparkTestBase {
       qKeyCol = "q_id", tieCol = "pid", maxRings = 8)
     assert(got.count() == 0)
     assert(got.columns.contains("knn_rank") && got.columns.contains("dist_m"))
+  }
+
+  test("adaptive join: a polygon spanning many hot cells equals the broadcast join (splitLevels 2, 3)") {
+    // a box over the London and Paris clusters and a triangle cutting
+    // through them, among the fixture's smaller polygons
+    val wide = polyRows ++ Seq(
+      6L -> Wkb.box(-2.0, 47.5, 3.5, 52.8),
+      7L -> Wkb.writePolygon(Array(Array[Double](-1.5, 47.6, 3.4, 48.4, 0.2, 52.7, -1.5, 47.6))))
+    val wdf = wide.toDF("poly_id", "geometry")
+    val res = 10; val hotThreshold = 5L
+    val hot = points.groupBy(graft.functions.geofunctions.cell_encode($"lat", $"lng", res).as("c"))
+      .count().where($"count" > hotThreshold).select($"c").as[Long].collect().toSet
+    val spanned = Cell.coverGeometry(wide.last._2, res).count(hot.contains)
+    assert(spanned >= 10, s"the triangle should span many hot cells, spans $spanned")
+    val exp = SpatialJoin.pointsInPolygons(points, wdf, res = res)
+      .select($"poly_id", $"pid").as[(Long, Long)].collect().toSet
+    for (split <- Seq(2, 3)) {
+      val got = SpatialJoin.pointsInPolygonsAdaptive(points, wdf, res = res,
+        hotThreshold = hotThreshold, splitLevels = split)
+        .select($"poly_id", $"pid").as[(Long, Long)].collect().toSet
+      assert(got == exp, s"splitLevels $split")
+    }
+    assert(exp.count(_._1 == 7L) > 100)
   }
 
   test("adaptive join accepts the CellIndex.build schema for cellCounts") {
