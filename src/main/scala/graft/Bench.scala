@@ -355,19 +355,23 @@ object Bench {
     * a refusal. Pure selection over (filename, content) pairs — unit
     * spec'd in BenchValiditySpec.
     *
-    * "Fully valid" = the artifact's own gate passed (`"throttled":false`)
-    * and it carries ≥1 pair-valid efficiency sample. "Best" = most valid
-    * samples first (a 2-sample full graded run beats a 1-sample ladder
-    * run), then the later run file (fresher machine state) — NOT the
-    * highest efficiency, which would be cherry-picking. Returns
-    * (file, medianEff, nSamples). */
+    * "Fully valid" = the artifact's own gate passed (`"throttled":false`),
+    * it carries ≥1 pair-valid efficiency sample, and it has no
+    * `"excluded"` field (set by hand on an artifact the probes passed but
+    * a later reading showed to be poisoned, e.g. an ambient burst).
+    * "Best" = most valid samples first (a 2-sample full graded run beats
+    * a 1-sample ladder run), then the later run file (fresher machine
+    * state) — NOT the highest efficiency, which would be cherry-picking.
+    * Returns (file, medianEff, nSamples). */
   private[graft] def bestValidCitation(
       files: Seq[(String, String)]): Option[(String, Double, Int)] = {
     val effRe = """"scaling_efficiency_2to8":([0-9.]+)""".r
     val samplesRe = """"eff_2to8_samples":\[([^\]]*)\]""".r
     val throttledRe = """"throttled":(true|false)""".r
     val runNumRe = """run_(\d+)\.json""".r
-    val candidates = files.flatMap { case (name, content) =>
+    val excludedRe = """"excluded"\s*:""".r
+    val kept = files.filter { case (_, content) => excludedRe.findFirstIn(content).isEmpty }
+    val candidates = kept.flatMap { case (name, content) =>
       for {
         thr <- throttledRe.findFirstMatchIn(content).map(_.group(1).toBoolean)
         if !thr

@@ -92,6 +92,18 @@ class BenchValiditySpec extends AnyFunSuite {
       "run_18.json" -> runJson(1.094, Seq(1.258, 0.93), throttled = false))).isEmpty)
   }
 
+  test("best-valid citation: artifacts marked excluded are never cited") {
+    // run_38-shaped: its own probes passed, but it is a burst-poisoned
+    // sample marked by hand; the next-best valid artifact is cited instead
+    val poisoned = "{\"excluded\":\"ambient burst, not a claim\"," +
+      runJson(0.713, Seq(0.713, 0.72), throttled = false).drop(1)
+    val got = Bench.bestValidCitation(Seq(
+      "run_37.json" -> runJson(0.9, Seq(0.9), throttled = false),
+      "run_38.json" -> poisoned))
+    assert(got.contains(("run_37.json", 0.9, 1)))
+    assert(Bench.bestValidCitation(Seq("run_38.json" -> poisoned)).isEmpty)
+  }
+
   test("best-valid citation: sample-count tie breaks to the later run") {
     val got = Bench.bestValidCitation(Seq(
       "run_2.json" -> runJson(0.95, Seq(0.95, 0.95), throttled = false),

@@ -1,6 +1,10 @@
 package graft
 
-import org.apache.spark.sql.functions._
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.types.{LongType, StructField}
 import graft.operators.{Components, Dedup}
 
 /** Connected components (large-star / small-star) vs a plain union-find
@@ -28,6 +32,35 @@ class ComponentsSpec extends SparkTestBase {
     Components.connectedComponents(edges.toDF("a", "b"), "a", "b")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
+  /** Jobs `body` submits, counted by a listener. A tagged one-task job
+    * before and after fences the asynchronous listener bus: once the
+    * closing job's start is seen, every earlier start has been seen. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val fences = new LinkedBlockingQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.job.description")) match {
+          case Some(tag) if tag != null && tag.startsWith("fence-") => fences.put(tag)
+          case _ => jobs.incrementAndGet()
+        }
+    }
+    def fence(tag: String): Unit = {
+      sc.setJobDescription(tag)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(fences.poll(60, TimeUnit.SECONDS) == tag)
+    }
+    sc.addSparkListener(listener)
+    try {
+      fence("fence-open")
+      jobs.set(0)
+      body
+      fence("fence-close")
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("matches union-find on seeded random graphs") {
     for (seed <- Seq(1, 2, 3)) {
       val rnd = new scala.util.Random(seed)
@@ -49,6 +82,40 @@ class ComponentsSpec extends SparkTestBase {
     val edges = (0L until 399L).map(i => (i, i + 1))
     val got = run(edges)
     assert(got.size == 400 && got.values.forall(_ == 0L))
+  }
+
+  test("each round is one job: the 400-node chain submits rounds + a constant") {
+    // the chain needs ~10 rounds, so maxRounds <= 4 stops every call by
+    // its round budget
+    val chain = (0L until 399L).map(i => (i, i + 1)).toDF("a", "b")
+    def jobs(maxRounds: Int): Int =
+      jobsOf(Components.connectedComponents(chain, "a", "b", maxRounds = maxRounds)
+        .collect())
+    val Seq(one, two, three, four) = Seq(1, 2, 3, 4).map(jobs)
+    assert(Seq(two - one, three - two, four - three) == Seq(1, 1, 1),
+      s"jobs for 1..4 rounds: $one, $two, $three, $four")
+    // the input edges' signature, round one, and the collect
+    assert(one <= 3, s"one round submitted $one jobs")
+  }
+
+  test("labelNodes with an empty edge list makes every node a singleton") {
+    val nodes = (0L until 6L).toDF("id")
+    val empty = spark.emptyDataset[(Long, Long)].toDF("a", "b")
+    val got = Components.labelNodes(nodes, "id", empty, "a", "b")
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got == (0L until 6L).map(i => i -> i).toMap)
+  }
+
+  test("result columns keep their names and types") {
+    val edges = Seq((1L, 2L), (2L, 4L)).toDF("a", "b")
+    def fields(df: DataFrame): Seq[StructField] = df.schema.fields.toSeq
+    val cc = Components.connectedComponents(edges, "a", "b")
+    val labels = Components.labelNodes(Seq(1L, 3L).toDF("doc_id"), "doc_id", edges, "a", "b")
+    // as the DataFrame rounds returned them, nullability included
+    assert(fields(cc) ==
+      Seq(StructField("id", LongType, true), StructField("component", LongType, true)))
+    assert(fields(labels) ==
+      Seq(StructField("doc_id", LongType, false), StructField("component", LongType, false)))
   }
 
   test("labelNodes assigns singleton components to isolated ids") {
