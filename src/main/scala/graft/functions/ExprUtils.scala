@@ -24,8 +24,4 @@ object ExprUtils {
 
   def bind(e: Column)(f: Column => Column): Column =
     element_at(transform(array(e), x => f(x)), 1)
-
-  /** Two-value form: both bound once, f sees both. */
-  def bind2(e1: Column, e2: Column)(f: (Column, Column) => Column): Column =
-    bind(e1)(x1 => bind(e2)(x2 => f(x1, x2)))
 }

@@ -156,10 +156,15 @@ object Dedup {
         (a, h) => least(a, h)))
   }
 
-  /** Convenience single-expression form (fine for one-off use; see the
-    * CollapseProject warning above for hot paths). */
-  def minhashSignature(text: Column, shingleLen: Int, numHashes: Int): Column =
-    minhashSignatureFromShingles(shingles(text, shingleLen), numHashes)
+  /** LSH band keys of a MinHash signature: one struct(b, h) per band `b`,
+    * `h` the band's `rowsPerBand` lane values joined with ",". The raw
+    * joined-lane string keeps candidate equality classes exact (and
+    * oracle-reproducible). Shared by the batch and streaming LSH plans. */
+  def bandKeys(sig: Column, bands: Int, rowsPerBand: Int): Column =
+    transform(sequence(lit(0), lit(bands - 1)),
+      b => struct(b.as("b"),
+        concat_ws(",", transform(slice(sig, b * rowsPerBand + 1, lit(rowsPerBand)),
+          x => x.cast("string"))).as("h")))
 
   /** MinHash + LSH banding near-dup candidate pairs, verified by estimated
     * Jaccard (fraction of matching signature positions).
@@ -206,10 +211,7 @@ object Dedup {
     // count. Results identical: est_jaccard is a pure function of the two
     // signatures, computed once per pair either way.
     val banded = sig.withColumn("_band",
-        explode(transform(sequence(lit(0), lit(bands - 1)),
-          b => struct(b.as("b"),
-            concat_ws(",", transform(slice(col("_sig"), b * rowsPerBand + 1, lit(rowsPerBand)),
-              x => x.cast("string"))).as("h")))))
+        explode(bandKeys(col("_sig"), bands, rowsPerBand)))
       .select(col("_id"), col("_band.b").as("_b"), col("_band.h").as("_h"))
     val cand = banded.select(col("_id").as("id_a"), col("_b"), col("_h"))
       .join(banded.select(col("_id").as("id_b"), col("_b"), col("_h")), Seq("_b", "_h"))

@@ -63,14 +63,6 @@ object TextAnalysis {
     round(lenScore + punctScore + stopScore, 1)
   }
 
-  /** Composite quality score in [0,1]: length band + low punctuation +
-    * some stopwords (the classic web-text quality heuristics, cf. C4/Gopher
-    * filtering rules — public methodology). One-off form; see
-    * qualityScoreFromStats for the hot path. */
-  def qualityScore(text: Column): Column =
-    qualityScoreFromStats(tokenCount(text), punctRatio(text),
-      stopwordRatio(text, EnglishStopwords))
-
   /** Per-language marker stopwords for the n-gram/stopword language-ID
     * heuristic. Deterministic and tiny by design. */
   val LangMarkers: Seq[(String, Seq[String])] = Seq(

@@ -99,16 +99,7 @@ object StreamOps {
     * the fact table. */
   def cellIndexStream(pages: DataFrame, res: Int,
                       latCol: String = "lat", lngCol: String = "lng"): DataFrame =
-    pages
-      .withColumn("cell", graft.functions.geofunctions.cell_encode(
-        col(latCol), col(lngCol), res))
-      .groupBy(col("cell"))
-      .agg(
-        count(lit(1)).as("n_rows"),
-        min(col(lngCol)).as("xmin"),
-        min(col(latCol)).as("ymin"),
-        max(col(lngCol)).as("xmax"),
-        max(col(latCol)).as("ymax"))
+    graft.operators.CellIndex.build(pages, res, latCol, lngCol)
 
   // ---- streaming near-dup twin (round 5) -------------------------------
 
@@ -161,12 +152,7 @@ object StreamOps {
       .select(col("doc_id"),
         Dedup.minhashSignatureFromShingles(col("_sh"), numHashes).as("sig"))
     val banded = sig
-      .withColumn("_band",
-        explode(transform(sequence(lit(0), lit(bands - 1)),
-          b => struct(b.as("b"),
-            concat_ws(",", transform(
-              slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand)),
-              x => x.cast("string"))).as("h")))))
+      .withColumn("_band", explode(Dedup.bandKeys(col("sig"), bands, rowsPerBand)))
       .select(col("_band.b").as("band"), col("_band.h").as("bandHash"),
         col("doc_id"), col("sig"))
       .as[BandDoc]
@@ -298,9 +284,4 @@ object StreamOps {
     }
     out.iterator
   }
-
-  /** Drains the still-open sessions from the final state (batch-parity
-    * helper for tests: closed sessions + open remainder == batch result). */
-  def openSessionOf(userId: Long, st: SessionState): SessionOut =
-    SessionOut(userId, st.sessionId, st.nEvents, st.cents)
 }

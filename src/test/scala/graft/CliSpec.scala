@@ -8,7 +8,7 @@ class CliSpec extends SparkTestBase {
   import spark.implicits._
 
   private def pagesPath: String = {
-    val p = "/root/repo/target/cli_pages"
+    val p = tmpPath("cli_pages")
     if (!new java.io.File(s"$p/_SUCCESS").exists())
       sources.DerivedTables.pages(spark, sfDir).write.mode("overwrite").parquet(p)
     p
@@ -110,11 +110,11 @@ class CliSpec extends SparkTestBase {
     // to the byte-parity cache path and sorting defaults ON
     val base = Array("buildings", "building", "--input", pagesPath,
       "--geom-filter-bbox", "10.00005,20.00005,30.00005,40.00005",
-      "--release", "2024-08-20.0", "--working-directory", "/root/repo/target/cli_refmode")
+      "--release", "2024-08-20.0", "--working-directory", tmpPath("cli_refmode"))
     val a = Cli.parseArgs(base)
     assert(a.referenceMode && a.sort && a.output == null)
     val expected = CachePaths.resultPath(
-      "/root/repo/target/cli_refmode", "2024-08-20.0", "buildings", "building",
+      tmpPath("cli_refmode"), "2024-08-20.0", "buildings", "building",
       Wkb.box(10.00005, 20.00005, 30.00005, 40.00005), None, None, sorted = true)
     assert(a.resolvedOutput == expected)
     assert(expected.endsWith("_nofilter_sorted.parquet") &&
@@ -129,12 +129,12 @@ class CliSpec extends SparkTestBase {
     assert(new java.io.File(s"$expected/_SUCCESS").exists())
     assert(spark.read.parquet(expected).count() == out.count() && out.count() > 0)
     // theme/type positionals prune a partition-columned features input
-    val featsPath = "/root/repo/target/cli_feats"
+    val featsPath = tmpPath("cli_feats")
     if (!new java.io.File(s"$featsPath/_SUCCESS").exists())
       sources.DerivedTables.polygons(spark, sfDir).write.mode("overwrite").parquet(featsPath)
     val af = Cli.parseArgs(Array("buildings", "building", "--input", featsPath,
       "--geom-filter-bbox", "-179.0,-89.0,179.0,89.0",
-      "--release", "2024-08-20.0", "--working-directory", "/root/repo/target/cli_refmode2"))
+      "--release", "2024-08-20.0", "--working-directory", tmpPath("cli_refmode2")))
     val rf = Cli.run(spark, af)
     import org.apache.spark.sql.functions.col
     assert(rf.where(col("theme") =!= "buildings" || col("type") =!= "building").count() == 0)
@@ -187,7 +187,7 @@ class CliSpec extends SparkTestBase {
 
   test("--geoparquet stamps the output with a bbox bounding the stored geometries") {
     import graft.operators.GeoParquetMeta
-    val outDir = "/root/repo/target/cli_geoparquet"
+    val outDir = tmpPath("cli_geoparquet")
     val a = Cli.parseArgs(Array("--input", pagesPath, "--output", outDir,
       "--geom-filter-bbox", "10.00005,20.00005,30.00005,40.00005", "--geoparquet"))
     val out = Cli.run(spark, a)

@@ -13,7 +13,7 @@ class LayoutPruningSpec extends SparkTestBase {
   import spark.implicits._
 
   test("cell-prefix partitioned layout: spatial filter prunes partitions in the plan") {
-    val base = "/root/repo/target/layout_pages"
+    val base = tmpPath("layout_pages")
     if (!new java.io.File(s"$base/_SUCCESS").exists()) {
       sources.DerivedTables.pages(spark, sfDir)
         .select($"page_id", $"lat", $"lng")

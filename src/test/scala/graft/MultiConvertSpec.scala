@@ -66,11 +66,11 @@ class MultiConvertSpec extends SparkTestBase {
   test("vocabulary index: persist/load roundtrip + content hashes") {
     val vb = WideFormVocabulary.build(feats.where(col("ftype") === "building"), Seq("cat", "sub"))
     val vp = WideFormVocabulary.build(feats.where(col("ftype") === "place"), Seq("cat", "sub"))
-    val idx = WideFormVocabulary.persist("/root/repo/target/vocab_test", "r1",
+    val idx = WideFormVocabulary.persist(tmpPath("vocab_test"), "r1",
       Seq(("base", "building", vb), ("base", "place", vp)))
     val json = java.nio.file.Files.readString(idx)
     assert(json.contains("\"theme\":\"base\"") && json.contains("\"sha\":\""))
-    val loaded = WideFormVocabulary.load(spark, "/root/repo/target/vocab_test", "r1", "base", "building")
+    val loaded = WideFormVocabulary.load(spark, tmpPath("vocab_test"), "r1", "base", "building")
     assert(loaded.collect().toSet == vb.collect().toSet)
     assert(WideFormVocabulary.contentSha(loaded) == WideFormVocabulary.contentSha(vb))
   }

@@ -191,7 +191,7 @@ class ParityExtrasSpec extends SparkTestBase {
   // ---- S8 sorted sink invariants ----
   test("hilbert-sorted sink: schema + row count preserved, file strictly smaller") {
     val pts = sources.DerivedTables.pages(spark, sfDir).select("page_id", "lat", "lng")
-    val base = "/root/repo/target/sink_test"
+    val base = tmpPath("sink_test")
     // unsorted baseline in random-ish (hash) order to make clustering matter
     SortedSink.writeCompact(pts.repartition(4, col("page_id")), s"$base/plain")
     SortedSink.writeHilbertSorted(pts, s"$base/sorted", "lat", "lng",
@@ -211,7 +211,7 @@ class ParityExtrasSpec extends SparkTestBase {
     import graft.operators.GeoParquetMeta
     val pts = sources.DerivedTables.pages(spark, sfDir)
       .select(col("page_id"), col("lat"), col("lng"))
-    val dir = "/root/repo/target/covering_test/pts"
+    val dir = tmpPath("covering_test/pts")
     SortedSink.writeHilbertSortedCovering(pts, dir, "lat", "lng",
       extent = (-180, -60, 180, 60), numFiles = 4,
       primaryColumn = "bbox_only_demo", geometryTypes = Seq("Point"))
@@ -249,7 +249,7 @@ class ParityExtrasSpec extends SparkTestBase {
       .select(col("page_id"), col("lat"), col("lng"),
         graft.functions.GeomConstructors.box_wkb(
           col("lng"), col("lat"), col("lng"), col("lat")).as("geometry"))
-    val dir = "/root/repo/target/geoparquet_test"
+    val dir = tmpPath("geoparquet_test")
     SortedSink.writeCompact(pts.repartition(3), dir)
     def digest(): (Long, String) = {
       val d = spark.read.parquet(dir)
@@ -325,7 +325,7 @@ class ParityExtrasSpec extends SparkTestBase {
     // reference parameterizes zstd 3..22 and pins zstd22 < zstd3
     // (tests/base/test_internals.py:56-83)
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val base = "/root/repo/target/zstd_test"
+    val base = tmpPath("zstd_test")
     SortedSink.writeCompact(docs.coalesce(1), s"$base/l3", compressionLevel = Some(3))
     SortedSink.writeCompact(docs.coalesce(1), s"$base/l22", compressionLevel = Some(22))
     def bytes(p: String): Long = Files.list(Paths.get(p)).toArray

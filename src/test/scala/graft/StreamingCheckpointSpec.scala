@@ -11,29 +11,22 @@ class StreamingCheckpointSpec extends SparkTestBase {
 
   test("streaming windowed agg == batch windowed agg on the events table") {
     // FileStreamSource needs a directory, not a single file
-    val streamDir = Paths.get("/root/repo/target/stream_events")
+    val streamDir = Paths.get(tmpPath("stream_events"))
     Files.createDirectories(streamDir)
     Files.copy(Paths.get(s"$sfDir/events.parquet"), streamDir.resolve("events.parquet"),
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
     val stream = spark.readStream.schema(schema).parquet(streamDir.toString)
-    val agg = stream
-      .withColumn("ts", col("ts").cast("timestamp"))
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(round(col("value") * 100).cast("long")).as("cents"))
     val qname = "ev_stream_out"
-    val q = agg.writeStream.outputMode("complete")
+    val q = graft.streaming.StreamOps.windowedAgg(stream)
+      .writeStream.outputMode("complete")
       .format("memory").queryName(qname)
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination(120000)
     val got = spark.table(qname)
-      .select(unix_timestamp(col("window.start")).as("bucket"), col("event_type"), col("n"), col("cents"))
       .as[(Long, String, Long, Long)].collect().toSet
-    val exp = spark.read.parquet(s"$sfDir/events.parquet")
-      .groupBy(window(col("ts").cast("timestamp"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(round(col("value") * 100).cast("long")).as("cents"))
-      .select(unix_timestamp(col("window.start")).as("bucket"), col("event_type"), col("n"), col("cents"))
+    // the batch twin: the catalog's ev_window query
+    val exp = SparkEntry.queries("ev_window")(spark, sfDir)
       .as[(Long, String, Long, Long)].collect().toSet
     assert(got == exp)
     assert(exp.nonEmpty)
@@ -43,7 +36,7 @@ class StreamingCheckpointSpec extends SparkTestBase {
     import graft.streaming.StreamOps
     import graft.streaming.StreamOps.{Event, SessionOut}
     // run the stateful operator in a micro-batch stream over the events table
-    val streamDir = Paths.get("/root/repo/target/stream_events2")
+    val streamDir = Paths.get(tmpPath("stream_events2"))
     Files.createDirectories(streamDir)
     Files.copy(Paths.get(s"$sfDir/events.parquet"), streamDir.resolve("events.parquet"),
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
@@ -71,7 +64,7 @@ class StreamingCheckpointSpec extends SparkTestBase {
   }
 
   test("streaming spatial join (stream-static broadcast) == batch flagship join") {
-    val streamDir = Paths.get("/root/repo/target/stream_pages")
+    val streamDir = Paths.get(tmpPath("stream_pages"))
     org.apache.commons.io.FileUtils.deleteQuietly(streamDir.toFile)
     Files.createDirectories(streamDir)
     // materialize the derived pages as the stream source
@@ -95,7 +88,7 @@ class StreamingCheckpointSpec extends SparkTestBase {
   }
 
   test("streaming cell-index maintenance converges to the batch index") {
-    val streamDir = Paths.get("/root/repo/target/stream_cellindex")
+    val streamDir = Paths.get(tmpPath("stream_cellindex"))
     org.apache.commons.io.FileUtils.deleteQuietly(streamDir.toFile)
     Files.createDirectories(streamDir)
     val pages = sources.DerivedTables.pages(spark, sfDir).select("page_id", "lat", "lng")
@@ -136,7 +129,7 @@ class StreamingCheckpointSpec extends SparkTestBase {
     // evaluating processing-time timeouts, and the restart proves the
     // band-bucket STATE survives checkpoint recovery (pairs spanning the
     // two runs are only findable from recovered state)
-    val base = Paths.get(s"/root/repo/target/neardup_${System.nanoTime()}")
+    val base = Paths.get(tmpPath("neardup"))
     val (ckpt, out) = (s"$base/ckpt", s"$base/out")
     def runOnce(): Unit = {
       val q = StreamOps.nearDupPairsStream(stream, "text", "doc_id",
@@ -204,7 +197,7 @@ class StreamingCheckpointSpec extends SparkTestBase {
     // documents table with planted duplicates: stream it and dedup by text
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .withColumn("ts", lit("2026-01-01 00:00:00").cast("timestamp"))
-    val dupDir = Paths.get("/root/repo/target/stream_docs")
+    val dupDir = Paths.get(tmpPath("stream_docs"))
     // write base + duplicated docs (same text, higher ids) as the stream input
     docs.select(col("doc_id"), col("text"), col("ts"))
       .unionByName(docs.where(col("doc_id") < 20)
@@ -227,7 +220,7 @@ class StreamingCheckpointSpec extends SparkTestBase {
 
   test("partition-granular resume: only missing cell prefixes are rebuilt") {
     import graft.functions.geofunctions._
-    val base = "/root/repo/target/ckpt_parts"
+    val base = tmpPath("ckpt_parts")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
     val pts = sources.DerivedTables.pages(spark, sfDir)
       .select($"page_id", $"lat", $"lng")
@@ -262,7 +255,7 @@ class StreamingCheckpointSpec extends SparkTestBase {
     // must be replaced on resume (dynamic partition overwrite), not
     // appended to.
     import graft.functions.geofunctions._
-    val base = "/root/repo/target/ckpt_crash"
+    val base = tmpPath("ckpt_crash")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
     val pts = sources.DerivedTables.pages(spark, sfDir)
       .select($"page_id", $"lat", $"lng")
@@ -326,7 +319,7 @@ class StreamingCheckpointSpec extends SparkTestBase {
   }
 
   test("checkpoint stage: second run skips recompute (manifest-gated resume)") {
-    val base = "/root/repo/target/ckpt_test"
+    val base = tmpPath("ckpt_test")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
     var builds = 0
     def build = {
@@ -348,7 +341,7 @@ class StreamingCheckpointSpec extends SparkTestBase {
   test("checkpoint stage: an ALL-EMPTY stage completes and resumes (schema sidecar)") {
     // a zero-row write emits no data files; without the schema sidecar the
     // read-back throws UNABLE_TO_INFER_SCHEMA and the stage wedges forever
-    val base = "/root/repo/target/ckpt_empty_test"
+    val base = tmpPath("ckpt_empty_test")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
     def build = spark.read.parquet(s"$sfDir/nation.parquet")
       .select($"n_nationkey", $"n_name").where(lit(false))
