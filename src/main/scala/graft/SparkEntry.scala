@@ -42,25 +42,30 @@ object SparkEntry {
   /** exact money-cents: round(x*100) as long — same on both engines */
   private def cents(c: Column): Column = round(c * 100).cast("long")
 
-  /** Deterministic global sort placed BELOW a query's expensive narrow
-    * projection (same rows, same total order as a trailing `orderBy`):
+  /** `df` in the deterministic total order of `keys`: the same rows in the
+    * same order as `orderBy(keys)`, which the oracle compares against.
     *
-    *  - a trailing `orderBy` makes the RangePartitioner SAMPLE its child,
-    *    executing the full expensive projection once for the sampling pass
-    *    and again for the output pass (guide §2.4 — the orderBy exists
-    *    only for deterministic output); sorting the narrow base columns
-    *    first computes the projection exactly once, above the sort;
-    *  - the partition count is pinned (`defaultParallelism`) instead of
-    *    relying on `orderBy`, because AQE coalesces a small range shuffle
-    *    to ONE partition and the expensive projection above it would run
-    *    single-threaded (measured on d_c4_filter: 5.8 s coalesced vs
-    *    ~1 s wide). AQE honors explicit repartition counts.
+    *  - A plain `orderBy` makes the range partitioner SAMPLE its child, so
+    *    the child runs once for the sampling pass and again for the output
+    *    pass, for an order that exists only for determinism. The lazy local
+    *    checkpoint lets both passes read the same blocks, so the child (an
+    *    exact-verify join, a codec, a label join) runs once.
+    *  - The partition count is pinned (`defaultParallelism`) because AQE
+    *    coalesces a small range shuffle to ONE partition, and a projection
+    *    kept above this helper would then run single-threaded (measured on
+    *    d_c4_filter: 5.8 s coalesced vs ~1 s wide). AQE honours explicit
+    *    repartition counts. So an expensive per-row projection goes ABOVE
+    *    the helper and runs once, in parallel, over sorted narrow rows.
     *
-    * Range partitions are emitted in key order and rows are sorted within
-    * each, so the global row order is identical to `orderBy(keys)` (all
-    * catalog sort keys are unique). */
-  private def presort(df: DataFrame, keys: Column*): DataFrame =
-    df.repartitionByRange(df.sparkSession.sparkContext.defaultParallelism, keys: _*)
+    * Range partitions come out in key order and rows are sorted within
+    * each, so the global order equals `orderBy(keys)` only when the keys
+    * are unique, as every catalog sort key is. Under AQE the checkpoint
+    * runs the child's shuffle stages when the query is built. Its blocks
+    * are not in the `CacheManager`; the ContextCleaner frees them once the
+    * result is unreachable. */
+  private def sortedResult(df: DataFrame, keys: Column*): DataFrame =
+    df.localCheckpoint(eager = false)
+      .repartitionByRange(df.sparkSession.sparkContext.defaultParallelism, keys: _*)
       .sortWithinPartitions(keys: _*)
 
   private val havSql = graft.sources.DerivedTables.haversineSql(
@@ -539,15 +544,8 @@ object SparkEntry {
         lit("<script>if (1 < 2) { x(); }</script></head><body><p class=\"a\">"),
         col("text"),
         lit("</p><br/>&amp;lt; stays &lt;b&gt; &#39;q&#39;&nbsp;end</body></html>"))
-      // SORT FIRST, extract after (identical rows in identical order): a
-      // trailing global orderBy makes the RangePartitioner sample its
-      // child — executing the full regex extraction once for the sampling
-      // pass and again for the output pass (guide §2.4: accidental double
-      // work behind an orderBy used for determinism). Sorting the narrow
-      // base columns first leaves the extraction ABOVE the sort, computed
-      // exactly once, and the exchange carries raw pages, not two
-      // extracted copies.
-      presort(pages(s, d)
+      // extraction above the sort: the exchange carries raw pages
+      sortedResult(pages(s, d)
         .select(col("page_id"), col("text"), col("html")), col("page_id"))
         .select(col("page_id"),
           Html.extractText(rich).as("extracted"),
@@ -570,15 +568,11 @@ object SparkEntry {
           Jpeg.encodeGray(w, h,
             (x, y) => ((id * 31 + 7 * (x / 8) + 13 * (y / 8)) % 256).toInt))
       }
-      // cache the (tiny) decoded rows before the global sort: the sort's
-      // range sampling otherwise executes the full encode+decode pipeline
-      // a second time (guide §1.4/§2.4 — the dominant cost here is the
-      // codec, not the 5000-row sort)
-      Multimodal.decodeFeatures(media).toDF()
+      // the codec, not the 5000-row sort, is the cost: it runs once below
+      // the sort's checkpoint
+      sortedResult(Multimodal.decodeFeatures(media).toDF()
         .select(col("id").as("doc_id"), col("width").cast("long").as("width"),
-          col("height").cast("long").as("height"), col("pixel_sum"))
-        .cache()
-        .orderBy(col("doc_id"))
+          col("height").cast("long").as("height"), col("pixel_sum")), col("doc_id"))
     }),
 
     "m_resize" -> ((s, d) => {
@@ -596,14 +590,10 @@ object SparkEntry {
           Jpeg.encodeGray(w, h,
             (x, y) => ((id * 31 + 7 * (x / 8) + 13 * (y / 8)) % 256).toInt))
       }
-      // cache before the sort: same double-decode-under-range-sampling
-      // reasoning as m_jpeg_decode
-      Multimodal.resizeImages(media, factor = 2)
+      sortedResult(Multimodal.resizeImages(media, factor = 2)
         .map(r => (r.id, r.width.toLong, r.height.toLong,
           r.payload.map(b => (b & 0xff).toLong).sum))
-        .toDF("doc_id", "width", "height", "pixel_sum")
-        .cache()
-        .orderBy(col("doc_id"))
+        .toDF("doc_id", "width", "height", "pixel_sum"), col("doc_id"))
     }),
 
     "m_wav_decode" -> ((s, d) => {
@@ -702,7 +692,7 @@ object SparkEntry {
         lit("@example.com from 10.0."), (col("doc_id") % 256).cast("string"),
         lit(".7 or call 555-123-4567 ext "), (col("doc_id") % 10).cast("string"),
         lit(".")))
-      presort(withPii.select(col("doc_id"), col("_t")), col("doc_id"))
+      sortedResult(withPii.select(col("doc_id"), col("_t")), col("doc_id"))
         .select(col("doc_id"), Curation.redactPii(col("_t")).as("_p"))
         .select(col("doc_id"), col("_p.redacted").as("redacted"),
           col("_p.n_email").cast("long").as("n_email"),
@@ -731,10 +721,11 @@ object SparkEntry {
           .when(col("doc_id") % 41 === 0, concat(base, lit("\nLorem Ipsum dolor sit amet.")))
           .otherwise(base)
       }
-      // sort the 2-column base first (d_html_extract's range-sampling
-      // reasoning): the synthetic line build + C4 rules then run once,
-      // above the sort, instead of once per pass
-      presort(documents(s, d)
+      // the synthetic line build + C4 rules run above the sort. The raw
+      // table, not `documents`: the range exchange spreads the rows, and
+      // the checkpoint would keep documents' round-robin shuffle, which
+      // the optimizer merges into the range one when nothing is between
+      sortedResult(graft.sources.TableSource.table(s, d, "documents")
         .select(col("doc_id"), col("text")), col("doc_id"))
         .select(col("doc_id"), Curation.c4Clean(txt, minWords = 3, minSentences = 2).as("_c"))
         .select(col("doc_id"), col("_c.clean_text").as("clean_text"),
@@ -763,8 +754,8 @@ object SparkEntry {
       // structure synthesized (4-token chunks; '• ' prefix when
       // (doc_id+i)%7==0, '...' suffix when (doc_id+i)%11==0) because the
       // fixture text is single-line; all exact integers, pure per-row map.
-      val base = presort(documents(s, d).select(col("doc_id"),
-        Dedup.tokens(col("text")).as("_toks")).cache(), col("doc_id"))
+      val base = sortedResult(documents(s, d).select(col("doc_id"),
+        Dedup.tokens(col("text")).as("_toks")), col("doc_id"))
       val n = ((size(col("_toks")) + lit(3)) / lit(4)).cast("int")
       val lines = when(size(col("_toks")) > 0,
         transform(sequence(lit(1), n), i => concat(
@@ -803,10 +794,8 @@ object SparkEntry {
         deduped.join(docs.select(col("doc_id"), col("domain")), "doc_id"),
         "domain", Dedup.hash60(col("doc_id").cast("string")), "doc_id",
         k = 50, salt = 8)
-      capped.select(col("doc_id"), col("domain"), col("n_kept"),
-          Sampling.hashSplit(col("doc_id"), 1000, 50).as("split"))
-        .cache() // sampler would re-run the two cap windows
-        .orderBy(col("doc_id"))
+      sortedResult(capped.select(col("doc_id"), col("domain"), col("n_kept"),
+        Sampling.hashSplit(col("doc_id"), 1000, 50).as("split")), col("doc_id"))
     }),
 
     "s_knn" -> ((s, d) => {
@@ -869,24 +858,24 @@ object SparkEntry {
     }),
 
     "d_quality" -> ((s, d) => {
-      // one tokenization pass: raw stats materialized behind a barrier,
-      // the three outputs derived from them (CollapseProject would
-      // otherwise re-run the regex splits per output column)
+      // one tokenization pass: raw stats materialized behind the sort's
+      // checkpoint, the three outputs derived from them above it
+      // (CollapseProject would otherwise re-run the regex splits per
+      // output column)
       val stats = documents(s, d).select(
         col("doc_id"),
         TextAnalysis.tokenCount(col("text")).as("n_tokens"),
         TextAnalysis.stopwordRatio(col("text"), TextAnalysis.EnglishStopwords).as("_sraw"),
-        TextAnalysis.punctRatio(col("text")).as("_praw")).cache()
-      stats.select(col("doc_id"), col("n_tokens"),
+        TextAnalysis.punctRatio(col("text")).as("_praw"))
+      sortedResult(stats, col("doc_id")).select(col("doc_id"), col("n_tokens"),
         round(col("_sraw") * 1000).cast("long").as("stop_permille"),
         TextAnalysis.qualityScoreFromStats(col("n_tokens"), col("_praw"), col("_sraw")).as("quality"))
-        .orderBy(col("doc_id"))
     }),
 
     "d_lang_guess" -> ((s, d) => {
       // tokenize once behind a barrier; 5 marker intersections read the array
-      val toks = presort(documents(s, d)
-        .select(col("doc_id"), Dedup.tokens(col("text")).as("_toks")).cache(), col("doc_id"))
+      val toks = sortedResult(documents(s, d)
+        .select(col("doc_id"), Dedup.tokens(col("text")).as("_toks")), col("doc_id"))
       toks.select(col("doc_id"),
           TextAnalysis.langGuessFromTokens(col("_toks")).as("lang_guess"))
     }),
@@ -895,13 +884,11 @@ object SparkEntry {
       // t = 0.4 dispatches to the Bayardo prefix-filter plan — the
       // dedup-typical, scale-representative path (the inverted-index
       // low-threshold corner is exercised separately by d_jaccard_lowt)
-      Dedup.ngramJaccardPairs(documents(s, d), "text", "doc_id",
-        shingleLen = 3, threshold = 0.4, maxShingleFreq = 10000)
+      sortedResult(Dedup.ngramJaccardPairs(documents(s, d), "text", "doc_id",
+          shingleLen = 3, threshold = 0.4, maxShingleFreq = 10000)
         .select(col("id_a"), col("id_b"),
-          round(col("jaccard") * 10000).cast("long").as("jaccard_e4"))
-        .cache() // tiny result; the sort's range sampler otherwise
-                 // re-executes the per-candidate exact-verify tail
-        .orderBy(col("id_a"), col("id_b"))
+          round(col("jaccard") * 10000).cast("long").as("jaccard_e4")),
+        col("id_a"), col("id_b"))
     }),
 
     "d_jaccard_lowt" -> ((s, d) => {
@@ -910,12 +897,11 @@ object SparkEntry {
       // 2.8e-4 at J=t) + EXACT per-pair Jaccard verify. The oracle below
       // is the full exact join — a recall miss would fail the hash gate,
       // so the green result certifies the banding caught every pair
-      Dedup.ngramJaccardPairs(documents(s, d), "text", "doc_id",
-        shingleLen = 3, threshold = 0.12, maxShingleFreq = 10000)
+      sortedResult(Dedup.ngramJaccardPairs(documents(s, d), "text", "doc_id",
+          shingleLen = 3, threshold = 0.12, maxShingleFreq = 10000)
         .select(col("id_a"), col("id_b"),
-          round(col("jaccard") * 10000).cast("long").as("jaccard_e4"))
-        .cache() // see d_jaccard_pairs: verify tail runs once, not twice
-        .orderBy(col("id_a"), col("id_b"))
+          round(col("jaccard") * 10000).cast("long").as("jaccard_e4")),
+        col("id_a"), col("id_b"))
     }),
 
     "d_vocab" -> ((s, d) => {
@@ -931,13 +917,12 @@ object SparkEntry {
       // the DuckDB oracle reproduces signatures, banding, and the
       // est-jaccard verify bit-for-bit (statistical recall vs brute force
       // is separately proven in DedupSpec with the fast engine hash)
-      Dedup.minhashLshPairs(documents(s, d), "text", "doc_id",
-        shingleLen = 2, numHashes = 32, bands = 16, threshold = 0.1,
-        signature = Dedup.minhashSignaturePortable)
+      sortedResult(Dedup.minhashLshPairs(documents(s, d), "text", "doc_id",
+          shingleLen = 2, numHashes = 32, bands = 16, threshold = 0.1,
+          signature = Dedup.minhashSignaturePortable)
         .select(col("id_a"), col("id_b"),
-          round(col("est_jaccard") * 10000).cast("long").as("est_e4"))
-        .cache() // tiny result; sampler would re-run the est-verify joins
-        .orderBy(col("id_a"), col("id_b"))
+          round(col("est_jaccard") * 10000).cast("long").as("est_e4")),
+        col("id_a"), col("id_b"))
     }),
 
     "d_simhash_pairs" -> ((s, d) => {
@@ -963,9 +948,8 @@ object SparkEntry {
       val pairs = Dedup.minhashLshPairs(docs, "text", "doc_id",
         shingleLen = 2, numHashes = 32, bands = 16, threshold = 0.1,
         signature = Dedup.minhashSignaturePortable)
-      Components.labelNodes(docs, "doc_id", pairs, "id_a", "id_b")
-        .cache() // sampler would re-run the label join
-        .orderBy(col("doc_id"))
+      sortedResult(Components.labelNodes(docs, "doc_id", pairs, "id_a", "id_b"),
+        col("doc_id"))
     }),
 
     "d_dedup_keep_best" -> ((s, d) => {
@@ -984,10 +968,9 @@ object SparkEntry {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("component"))
         .orderBy(col("n_tokens").desc, col("doc_id").asc)
-      withLen.withColumn("_rn", row_number().over(w)).where(col("_rn") === 1)
-        .select(col("component"), col("doc_id").as("keep_id"), col("n_tokens"))
-        .cache() // sampler would re-run the window + label join
-        .orderBy(col("component"))
+      sortedResult(withLen.withColumn("_rn", row_number().over(w)).where(col("_rn") === 1)
+        .select(col("component"), col("doc_id").as("keep_id"), col("n_tokens")),
+        col("component"))
     }),
 
     "d_decontaminate" -> ((s, d) => {
@@ -1058,15 +1041,12 @@ object SparkEntry {
       // as 2-token chunks and "paragraphs" as 3-token chunks (the operator
       // API itself takes any unit array — textLines/textParagraphs for
       // real newline-structured corpora, spec-covered). One tokenization
-      // behind a cache barrier; everything downstream is narrow per-row
-      // compute — the 100 TB plan is a pure map, no exchange at all.
-      // cache the tokenization barrier, then sort BEFORE the seven signal
-      // aggregates: the trailing orderBy's range sampling re-executed all
-      // of them (the cache only shielded tokenization); sorted-first they
-      // run once and the sampler reads the cache
-      val base = presort(documents(s, d).select(
+      // behind the sort's checkpoint; the seven signal aggregates are
+      // narrow per-row compute above it — the 100 TB plan is a pure map
+      // plus the output sort.
+      val base = sortedResult(documents(s, d).select(
         col("doc_id"), col("text"), length(col("text")).cast("long").as("_len"),
-        Dedup.tokens(col("text")).as("_toks")).cache(), col("doc_id"))
+        Dedup.tokens(col("text")).as("_toks")), col("doc_id"))
       val lines = TextAnalysis.tokenChunks(col("_toks"), 2)
       val paras = TextAnalysis.tokenChunks(col("_toks"), 3)
       base.select(col("doc_id"),
@@ -1149,13 +1129,11 @@ object SparkEntry {
       val sampled = Sampling.stratifiedSample(clean, "lang", "doc_id",
         perKeyBudget = 25)
         .select(col("doc_id"), col("lang"), col("text")).cache()
-      CorpusOps.packChunks(sampled, "text", "doc_id", chunkTokens = 512,
+      sortedResult(CorpusOps.packChunks(sampled, "text", "doc_id", chunkTokens = 512,
           buckets = 32)
         .join(sampled.select(col("doc_id"), col("lang")), "doc_id")
         .select(col("doc_id"), col("lang"), col("n_tokens"),
-          col("tok_start"), col("chunk_first"), col("chunk_last"))
-        .cache() // sampler would re-run the packing window + lang join
-        .orderBy(col("doc_id"))
+          col("tok_start"), col("chunk_first"), col("chunk_last")), col("doc_id"))
     }),
 
     "d_sample_hash" -> ((s, d) => {
@@ -1300,10 +1278,8 @@ object SparkEntry {
       // embedding-cosine near-dup pairs: banded-LSH candidates + EXACT
       // integer threshold verify (cos >= 0.4 ⟺ dot>0 ∧ 25·dot² ≥ 4·‖a‖²‖b‖²
       // on the 10^-6-quantized vectors — bit-reproducible in DuckDB HUGEINT)
-      Dedup.embeddingNearDupPairs(embeddings(s, d), "embedding", "vec_id",
-        t2n = 4, t2d = 25, planes = AnnPlanes, bands = 8)
-        .cache() // tiny result; sampler would re-run the decimal verify joins
-        .orderBy(col("id_a"), col("id_b"))
+      sortedResult(Dedup.embeddingNearDupPairs(embeddings(s, d), "embedding", "vec_id",
+        t2n = 4, t2d = 25, planes = AnnPlanes, bands = 8), col("id_a"), col("id_b"))
     }),
 
     // ===== events: time-window aggregation + sessionization =====

@@ -136,7 +136,12 @@ object StreamOps {
     * Skew note: a degenerate band value (e.g. boilerplate-heavy shingles)
     * concentrates docs in one bucket and pair emission is quadratic in
     * its occupancy — identical blowup to the batch LSH join on the same
-    * data; the TTL is also the pressure valve for that case. */
+    * data; the TTL is also the pressure valve for that case.
+    *
+    * The timeout makes every trigger plan a no-data batch, so a
+    * `Trigger.AvailableNow` query never ends unless
+    * `spark.sql.streaming.noDataMicroBatches.enabled` is false; with
+    * no-data batches off, timeouts fire only when data arrives. */
   def nearDupPairsStream(docs: DataFrame, textCol: String, idCol: String,
                          shingleLen: Int = 2, numHashes: Int = 32,
                          bands: Int = 16, threshold: Double = 0.1,
@@ -240,7 +245,10 @@ object StreamOps {
     * custom-state seam). A processing-time timeout (the gap duration)
     * closes idle users' open sessions and drops their state — without it,
     * an idle user's session would never be emitted and its state retained
-    * forever (unbounded state at 10^9 users). */
+    * forever (unbounded state at 10^9 users). As in [[nearDupPairsStream]],
+    * a `Trigger.AvailableNow` query ends only with
+    * `spark.sql.streaming.noDataMicroBatches.enabled` false, and then
+    * timeouts fire only when data arrives. */
   def sessionize(events: Dataset[Event]): Dataset[SessionOut] = {
     import events.sparkSession.implicits._
     events

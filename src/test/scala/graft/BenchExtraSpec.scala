@@ -37,5 +37,14 @@ class BenchExtraSpec extends SparkTestBase {
     // q1_agg groups and orders: at least one shuffle, no cartesian
     val row(_, shuffles, _, _, cartesian, _, _) = rows.head
     assert(shuffles.toInt > 0 && cartesian.toInt == 0)
+    // d_minhash_pairs' final plan reads its sort's checkpoint and holds only
+    // the range exchange; the row also counts the band self-join's
+    // exchanges, which ran inside the checkpoint
+    val minhash = SparkEntry.queries("d_minhash_pairs")(spark, sfDir)
+    minhash.collect()
+    assert(BenchExtra.shape(Seq(minhash.queryExecution.executedPlan)).shuffles == 1)
+    val row(_, minhashShuffles, _, _, _, _, _) = rows(1)
+    assert(minhashShuffles.toInt > 1)
+    spark.catalog.clearCache()
   }
 }

@@ -9,7 +9,10 @@ import graft.functions.ExprUtils.bind
   *    signature column) — the VERDICT r5 "What's wrong #1" fix;
   *  - flagOverlapBloom carries the bloom as a scalar subquery, not a plan
   *    Literal — "What's wrong #2";
-  *  - ExprUtils.bind is a pure let-binding (same values, nulls included).
+  *  - ExprUtils.bind is a pure let-binding (same values, nulls included);
+  *  - a catalog query's sort tail (`SparkEntry.sortedResult`) leaves
+  *    nothing in the CacheManager, and its checkpoint blocks go once the
+  *    result is unreachable.
   */
 class OptimizationR06Spec extends SparkTestBase {
   import spark.implicits._
@@ -87,5 +90,39 @@ class OptimizationR06Spec extends SparkTestBase {
     // scalar bind on a nullable value
     val b = df.select(bind(length(col("t")))(l => l + l).as("twice")).collect().map(_.get(0))
     assert(b.toSeq == Seq(7 * 2, 0, null))
+  }
+
+  /** The queries that end in `SparkEntry.sortedResult` and call no operator
+    * that caches (the Dedup pair and d_curate_full tails do). */
+  private val sortTails = Seq("d_html_extract", "d_pii_redact", "d_c4_filter",
+    "d_gopher_quality", "d_lang_guess", "d_repetition", "d_quality",
+    "m_jpeg_decode", "m_resize", "d_curate_e2e", "d_embed_neardup")
+
+  test("sort tails leave nothing in the CacheManager") {
+    val cacheManager = spark.sharedState.cacheManager
+    sortTails.foreach { q =>
+      spark.catalog.clearCache()
+      assert(SparkEntry.queries(q)(spark, sfDir).collect().nonEmpty, q)
+      assert(cacheManager.isEmpty, s"$q left a cached relation")
+    }
+  }
+
+  test("a sort tail's checkpoint blocks are freed once its result is unreachable") {
+    // built and run in a method so no reference to the result outlives it
+    def runAndForget(): Int = {
+      val df = SparkEntry.queries("m_resize")(spark, sfDir)
+      df.collect()
+      val rdd = df.queryExecution.logical.collectFirst {
+        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+      }
+      assert(rdd.nonEmpty, "expected the sort to read a checkpoint")
+      assert(held(rdd.get), "the checkpoint holds blocks while its result is reachable")
+      rdd.get
+    }
+    def held(id: Int) = spark.sparkContext.getRDDStorageInfo.exists(_.id == id)
+    val id = runAndForget()
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    while (held(id) && System.nanoTime() < deadline) { System.gc(); Thread.sleep(200) }
+    assert(!held(id), s"checkpoint rdd $id still holds blocks 30 s after its result went")
   }
 }

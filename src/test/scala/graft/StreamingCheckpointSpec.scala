@@ -1,13 +1,29 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import java.nio.file.{Files, Paths}
 
 /** Structured Streaming parity (windowed agg over the events table matches
   * the batch result) + checkpoint/resume semantics. */
 class StreamingCheckpointSpec extends SparkTestBase {
   import spark.implicits._
+
+  /** Runs `body` with no-data micro-batches off, then restores the conf.
+    * A processing-time-timeout query plans a no-data batch on every
+    * trigger, so under `Trigger.AvailableNow` it would never end. */
+  private def withoutNoDataBatches[T](body: => T): T = {
+    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** Waits for an `AvailableNow` query to end, failing if it has not within
+    * two minutes; the query is stopped either way. */
+  private def finish(q: StreamingQuery): Unit =
+    try assert(q.awaitTermination(120000), s"query ${q.name} did not end in 120 s")
+    finally q.stop()
 
   test("streaming windowed agg == batch windowed agg on the events table") {
     // FileStreamSource needs a directory, not a single file
@@ -22,7 +38,7 @@ class StreamingCheckpointSpec extends SparkTestBase {
       .writeStream.outputMode("complete")
       .format("memory").queryName(qname)
       .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(120000)
+    finish(q)
     val got = spark.table(qname)
       .as[(Long, String, Long, Long)].collect().toSet
     // the batch twin: the catalog's ev_window query
@@ -45,10 +61,12 @@ class StreamingCheckpointSpec extends SparkTestBase {
       .select(col("event_id"), col("user_id"),
         unix_micros(col("ts").cast("timestamp")).as("ts_us"), col("value"))
       .as[Event]
-    val q = StreamOps.sessionize(evStream)
-      .writeStream.outputMode("append").format("memory").queryName("sess_out")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination(120000)
+    withoutNoDataBatches {
+      val q = StreamOps.sessionize(evStream)
+        .writeStream.outputMode("append").format("memory").queryName("sess_out")
+        .trigger(Trigger.AvailableNow()).start()
+      finish(q)
+    }
     val closed = spark.table("sess_out").as[SessionOut].collect().toSet
 
     // batch oracle: the ev_sessionize window query, minus each user's LAST
@@ -78,7 +96,7 @@ class StreamingCheckpointSpec extends SparkTestBase {
     val q = joined.writeStream.outputMode("append")
       .format("memory").queryName("spatial_stream_out")
       .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(120000)
+    finish(q)
     val got = spark.table("spatial_stream_out")
       .as[(Long, Long)].collect().toSet
     val exp = graft.operators.SpatialJoin.pointsInPolygons(pages, polys, res = 5)
@@ -102,7 +120,7 @@ class StreamingCheckpointSpec extends SparkTestBase {
       .writeStream.outputMode("complete")
       .format("memory").queryName("cell_index_stream")
       .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(120000)
+    finish(q)
     val got = spark.table("cell_index_stream")
       .as[(Long, Long, Double, Double, Double, Double)].collect().toSet
     val exp = graft.operators.CellIndex.build(pages, res = 4)
@@ -125,19 +143,20 @@ class StreamingCheckpointSpec extends SparkTestBase {
     val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
     val stream = mem.toDF().toDF("doc_id", "text")
     // Trigger.AvailableNow + a file sink, restarted per half over ONE
-    // checkpoint: the default trigger would spin empty batches forever
-    // evaluating processing-time timeouts, and the restart proves the
-    // band-bucket STATE survives checkpoint recovery (pairs spanning the
-    // two runs are only findable from recovered state)
+    // checkpoint, with no-data batches off (else each run would spin
+    // empty batches evaluating processing-time timeouts and never end);
+    // the restart proves the band-bucket STATE survives checkpoint
+    // recovery (pairs spanning the two runs are only findable from
+    // recovered state)
     val base = Paths.get(tmpPath("neardup"))
     val (ckpt, out) = (s"$base/ckpt", s"$base/out")
-    def runOnce(): Unit = {
+    def runOnce(): Unit = withoutNoDataBatches {
       val q = StreamOps.nearDupPairsStream(stream, "text", "doc_id",
           shingleLen = 2, numHashes = 32, bands = 16, threshold = 0.1)
         .writeStream.outputMode("append").format("parquet")
         .option("checkpointLocation", ckpt).option("path", out)
         .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination(180000); q.stop()
+      finish(q)
     }
     mem.addData(first: _*); runOnce()
     val afterFirst = spark.read.parquet(out).count()
@@ -209,7 +228,7 @@ class StreamingCheckpointSpec extends SparkTestBase {
     val q = StreamOps.dedupStream(stream, "text", "ts")
       .writeStream.outputMode("append").format("memory").queryName(qname)
       .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(120000)
+    finish(q)
     val got = spark.table(qname)
     val input = spark.read.parquet(dupDir.toString)
     // one survivor per distinct text; every text represented
@@ -374,9 +393,9 @@ class StreamingCheckpointSpec extends SparkTestBase {
       .writeStream.outputMode("update").format("memory").queryName(out)
       .trigger(Trigger.AvailableNow())
     mem.addData(first: _*)
-    val q1 = q.start(); q1.awaitTermination(120000); q1.stop()
+    finish(q.start())
     mem.addData(second: _*)
-    val q2 = q.start(); q2.awaitTermination(120000); q2.stop()
+    finish(q.start())
     // last emitted snapshot per (shard, term) = the converged summary
     val snap = spark.table(out).select($"shard", $"term", $"mg_count")
       .as[(Long, String, Long)].collect()
@@ -414,9 +433,9 @@ class StreamingCheckpointSpec extends SparkTestBase {
       .writeStream.outputMode("complete").format("memory").queryName(out)
       .trigger(Trigger.AvailableNow())
     mem.addData(first: _*)
-    val q1 = q.start(); q1.awaitTermination(120000); q1.stop()
+    finish(q.start())
     mem.addData(second: _*)
-    val q2 = q.start(); q2.awaitTermination(120000); q2.stop()
+    finish(q.start())
     val got = spark.table(out).select($"doc_id", $"n_shared")
       .as[(Long, Long)].collect().toSet
     val exp = CorpusOps.flagOverlap(
