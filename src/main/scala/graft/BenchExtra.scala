@@ -7,7 +7,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{CollapseCodegenStages, FileSourceScanExec, FormattedMode,
   QueryExecution, SortExec, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
 import org.apache.spark.sql.execution.reuse.ReuseExchangeAndSubquery
@@ -96,22 +95,14 @@ object BenchExtra {
     * changes at run time (a join turned into a broadcast, an exchange
     * dropped) depends on which query stage finishes first, so it differs
     * between runs of one query. Subqueries count; a reused exchange does
-    * not count again, and the plan behind a cached relation counts once,
-    * however many scans read it. */
+    * not count again. */
   def shape(plans: Seq[SparkPlan]): Shape = {
-    val cached = java.util.Collections.newSetFromMap(
-      new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean]())
     val nodes = mutable.ArrayBuffer[SparkPlan]()
     def walk(p: SparkPlan): Unit = p match {
       case a: AdaptiveSparkPlanExec =>
         walk(ReuseExchangeAndSubquery(CollapseCodegenStages()(a.initialPlan)))
       case _ =>
         nodes += p
-        p match {
-          case scan: InMemoryTableScanExec if cached.add(scan.relation.cachedPlan) =>
-            walk(scan.relation.cachedPlan)
-          case _ =>
-        }
         (p.children ++ p.subqueries).foreach(walk)
     }
     plans.foreach(walk)
@@ -161,10 +152,9 @@ object BenchExtra {
         |out as a non-adaptive plan has them, because what AQE changes at run
         |time (a join turned into a broadcast, an exchange dropped) depends on
         |which query stage finishes first and so differs between runs.
-        |Subqueries count; a reused exchange does not count again, and the
-        |plan behind a cached relation counts once per query however many
-        |scans read it. Jobs an operator runs on an RDD taken from a plan (the
-        |`Components` rounds) are not SQL executions and do not count.
+        |Subqueries count; a reused exchange does not count again. Jobs an
+        |operator runs on an RDD taken from a plan (the `Components` rounds)
+        |are not SQL executions and do not count.
         |
         |- shuffles — shuffle exchanges (each a full network pass of its input at scale);
         |- bcasts — broadcast exchanges (dimension sides);

@@ -1121,14 +1121,12 @@ object SparkEntry {
       val clean = kept.join(
         CorpusOps.flagOverlap(kept, evalDocs, "text", "doc_id", n = 4)
           .select("doc_id"), Seq("doc_id"), "left_anti")
-      // cached projection: `sampled` is consumed TWICE (packChunks input +
-      // the lang re-join) and its upstream is the entire gate → anti-join
-      // → sample chain — uncached, the whole pipeline ran once per
-      // consumer (plus once per packChunks driver action, now also fixed
-      // inside packChunks)
+      // barrier: `sampled` is consumed TWICE (packChunks input + the lang
+      // re-join) and its upstream is the entire gate → anti-join → sample
+      // chain — without it the whole pipeline ran once per consumer
       val sampled = Sampling.stratifiedSample(clean, "lang", "doc_id",
         perKeyBudget = 25)
-        .select(col("doc_id"), col("lang"), col("text")).cache()
+        .select(col("doc_id"), col("lang"), col("text")).localCheckpoint(eager = false)
       sortedResult(CorpusOps.packChunks(sampled, "text", "doc_id", chunkTokens = 512,
           buckets = 32)
         .join(sampled.select(col("doc_id"), col("lang")), "doc_id")

@@ -8,6 +8,9 @@ import org.apache.spark.sql.functions._
   * per-document columns (`TextAnalysis`) and near-dup pairing (`Dedup`):
   * benchmark decontamination, duplicated-span measurement, sequence
   * packing, and distinctive-term extraction.
+  * Inputs read by several actions sit behind a lazy `localCheckpoint`:
+  * building the operator runs their shuffle stages (AQE), and the
+  * ContextCleaner frees the blocks once the result is unreachable.
   */
 object CorpusOps {
 
@@ -155,24 +158,20 @@ object CorpusOps {
     * 3. a per-bucket window cumsum shifted by the bucket's prefix, the
     *    offsets riding along as a broadcast map literal.
     * Three narrow passes over a 2-column projection; nothing global ever
-    * sorts. At production scale persist the (id, n_tokens) projection
-    * first so passes 2–3 don't recompute tokenization. */
+    * sorts. */
   def packChunks(df: DataFrame, textCol: String, idCol: String,
                  chunkTokens: Int, buckets: Int = 32): DataFrame = {
     require(chunkTokens > 0 && buckets > 0)
     def floorDiv(x: Column, d: Column): Column =
       ((x - pmod(x, d)) / d).cast("long") // nonneg x throughout
-    // CACHED: this operator runs three actions over `toks` (the id-bounds
+    // barrier: this operator runs three actions over `toks` (the id-bounds
     // head(), the per-bucket totals collect(), and the final windowed
-    // plan) — uncached, each re-executed the ENTIRE upstream plan
+    // plan) — without it each re-executed the ENTIRE upstream plan
     // (for the composed d_curate_full recipe that upstream is the whole
     // dup-span gate + decontamination + sampling pipeline, recomputed 3×).
-    // The projection is 2 longs/doc — exactly the "persist the
-    // (id, n_tokens) projection first" note below, now done by the
-    // operator itself.
     val toks = df.select(col(idCol).cast("long").as(idCol),
       size(Dedup.tokens(col(textCol))).cast("long").as("n_tokens"))
-      .cache()
+      .localCheckpoint(eager = false)
     val bounds = toks.agg(min(col(idCol)), max(col(idCol))).head()
     if (bounds.isNullAt(0))
       return toks.select(col(idCol), col("n_tokens"),

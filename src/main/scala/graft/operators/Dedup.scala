@@ -7,6 +7,9 @@ import org.apache.spark.sql.functions._
   * not present in the reference — required engine components per the build
   * brief). All are pure DataFrame plans: shuffles only on the natural keys,
   * map-side partial aggregation everywhere, no driver-side loops.
+  * Inputs read by several consumers sit behind a lazy `localCheckpoint`:
+  * building a pair operator runs their shuffle stages (AQE), and the
+  * ContextCleaner frees the blocks once the result is unreachable.
   */
 object Dedup {
 
@@ -121,7 +124,7 @@ object Dedup {
     * `zip_with`. (The naive per-lane `transform`+`array_min` form re-walks
     * the array `numHashes` times — 32× the traversals — and, worse,
     * Catalyst's CollapseProject inlines a non-materialized shingle subtree
-    * into every lane; callers must still cache/checkpoint the shingle
+    * into every lane; callers must still checkpoint the shingle
     * column.) Empty shingle arrays yield Long.MaxValue lanes. */
   def minhashSignatureFromShingles(sh: Column, numHashes: Int): Column =
     aggregate(
@@ -190,17 +193,18 @@ object Dedup {
     val rowsPerBand = numHashes / bands
     // materialization barrier: the shingle array feeds the signature
     // aggregate; without it CollapseProject re-runs the regex tokenization
-    // per consumer. (At 10^12 scale: a checkpointed table.)
+    // per consumer. (At 10^12 scale: a reliable checkpoint or a table.)
     // Docs too short to produce one shingle are EXCLUDED: they have no
     // fingerprint in this family, and the all-sentinel signature would
     // otherwise bucket every short doc together — M²/2 spurious
     // est_jaccard=1.0 pairs of unrelated texts plus a one-bucket hot key.
     val sh = df.select(col(idCol).as("_id"),
       shingles(col(textCol), shingleLen).as("_sh"))
-      .where(size(col("_sh")) > 0).cache()
+      .where(size(col("_sh")) > 0).localCheckpoint(eager = false)
+    // barrier: `sig` feeds both band sides and both per-pair re-joins
     val sig = sh.select(col("_id"),
       signature(col("_sh"), numHashes).as("_sig"))
-      .cache()
+      .localCheckpoint(eager = false)
     // IDS-ONLY band exchange (the discipline embeddingNearDupPairs and
     // ngramJaccardPairsMinhashVerify already follow): the self-join and
     // the pair-dedup carry (band-key, id) — 8 bytes of id, never the
@@ -274,11 +278,14 @@ object Dedup {
     val bandBits = SimHashBits / bands
     val bandMask = (1L << bandBits) - 1
     // zero-token docs are excluded: they'd all get fingerprint 0 and pair
-    // with each other at Hamming 0 (same artifact as the MinHash sentinel)
+    // with each other at Hamming 0 (same artifact as the MinHash sentinel).
+    // Barriers: `th` keeps CollapseProject from inlining the tokenization
+    // into the 60-lane vote; `fp` feeds both sides of the band self-join.
     val th = df.select(col(idCol).as("_id"),
       transform(tokens(col(textCol)), t => hash60(t)).as("_th"))
-      .where(size(col("_th")) > 0).cache()
-    val fp = th.select(col("_id"), simhashFromHashes(col("_th")).as("_fp")).cache()
+      .where(size(col("_th")) > 0).localCheckpoint(eager = false)
+    val fp = th.select(col("_id"), simhashFromHashes(col("_th")).as("_fp"))
+      .localCheckpoint(eager = false)
     val banded = fp.withColumn("_q", explode(array((0 until bands).map { q =>
       struct(lit(q).as("q"), shiftright(col("_fp"), q * bandBits).bitwiseAND(lit(bandMask)).as("v"))
     }: _*)))
@@ -355,13 +362,13 @@ object Dedup {
     val sh = df.select(col(idCol).as("_id"),
         shingles(col(textCol), shingleLen).as("_sh"))
       .where(size(col("_sh")) > 0)
-      .cache() // consumers: signature banding + per-pair exact verify
-    // cached: `banded` feeds BOTH sides of the candidate self-join, and
-    // without the barrier each side re-runs the 64-lane signature
-    // aggregate (the dominant narrow cost) over the cached shingles
+      .localCheckpoint(eager = false) // read by signature banding + per-pair exact verify
+    // barrier: `banded` feeds BOTH sides of the candidate self-join, and
+    // without it each side re-runs the 64-lane signature aggregate (the
+    // dominant narrow cost) over the checkpointed shingles
     val sig = sh.select(col("_id"),
       minhashSignatureFromShingles(col("_sh"), numHashes).as("_sig"))
-      .cache()
+      .localCheckpoint(eager = false)
     // r = 1: band key = (lane index, lane value); uniform fan-out of
     // numHashes rows per doc
     val banded = sig.select(col("_id"),
@@ -391,7 +398,7 @@ object Dedup {
     val ds = df.select(col(idCol).as("_id"),
         explode(shingles(col(textCol), shingleLen)).as("_sh"))
       .distinct()
-      .cache() // reused: sizes, frequency filter, self-join (both sides)
+      .localCheckpoint(eager = false) // read by sizes, frequency filter, self-join (both sides)
     val filtered = ds.join(
       ds.groupBy(col("_sh")).agg(count(lit(1)).as("_f"))
         .where(col("_f") <= maxShingleFreq).select("_sh"),
@@ -416,8 +423,7 @@ object Dedup {
     val ds = df.select(col(idCol).as("_id"),
         explode(shingles(col(textCol), shingleLen)).as("_sh"))
       .distinct()
-      .cache() // two consumers (freq, perDoc): shingling is the dominant
-               // narrow cost — same trade the inverted plan makes
+      .localCheckpoint(eager = false) // read by freq and perDoc: shingling runs once
     val freq = ds.groupBy(col("_sh")).agg(count(lit(1)).as("_f"))
       .where(col("_f") <= maxShingleFreq)
     // per-doc shingle set ordered rarest-first (global total order:
@@ -426,7 +432,7 @@ object Dedup {
       .groupBy(col("_id"))
       .agg(sort_array(collect_list(struct(col("_f"), col("_sh")))).as("_arr"),
         count(lit(1)).as("_n"))
-      .cache() // reused: prefix explode + per-pair exact intersection
+      .localCheckpoint(eager = false) // read by prefix explode + per-pair exact intersection
     // prefix of length n − ⌈t·n⌉ + 1 (complete by the prefix-filter theorem)
     val prefixLen = (col("_n") - ceil(col("_n") * lit(threshold)) + 1).cast("int")
     val prefix = perDoc

@@ -3,7 +3,7 @@ package graft.operators
 import java.awt.image.BufferedImage
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import javax.imageio.{IIOImage, ImageIO, ImageWriteParam}
-import javax.imageio.stream.MemoryCacheImageOutputStream
+import javax.imageio.stream.{MemoryCacheImageInputStream, MemoryCacheImageOutputStream}
 
 /** JPEG encode/decode through the pure-JDK `javax.imageio` codec (offline,
   * no external libraries) — the second REAL codec behind the multimodal
@@ -19,13 +19,6 @@ import javax.imageio.stream.MemoryCacheImageOutputStream
   * entropy-coding / DCT pipeline (verified empirically in JpegSpec; a
   * decoder or writer change that breaks any stage breaks the sum). */
 object Jpeg {
-
-  // By default javax.imageio backs every image stream with a DISK cache
-  // file (FileCacheImageInputStream) — one temp-file create/write/delete
-  // per decoded payload, which dominated the per-row decode cost
-  // (measured: ~7 ms/op for 24×24 images). Byte-array payloads have no
-  // business touching disk; memory-backed streams are bit-identical.
-  ImageIO.setUseCache(false)
 
   // One reader/writer instance per THREAD, not per row: the ImageIO
   // registry lookup + codec instantiation per call is pure overhead in a
@@ -66,7 +59,10 @@ object Jpeg {
     * pixel — the same shape [[Png.decode]] produces for grayscale. */
   def decode(payload: Array[Byte]): Decoded = {
     val reader = readerTL.get()
-    val iis = ImageIO.createImageInputStream(new ByteArrayInputStream(payload))
+    // memory-backed: `ImageIO.createImageInputStream` would back it with a
+    // temp FILE per payload (the JVM-wide cache default), which dominated
+    // the per-row decode cost (~7 ms/op for 24×24 images)
+    val iis = new MemoryCacheImageInputStream(new ByteArrayInputStream(payload))
     val img =
       try {
         reader.setInput(iis, true, true)

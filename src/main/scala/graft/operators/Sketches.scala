@@ -8,6 +8,9 @@ import org.apache.spark.sql.functions._
   * GUARANTEED SUPERSET of the answer, and one exact pass restricted to
   * the candidates removes the overshoot — so the result is exact while
   * the unbounded-cardinality aggregation state never materializes.
+  * Inputs read by several passes sit behind a lazy `localCheckpoint`:
+  * building the operator runs their shuffle stages (AQE), and the
+  * ContextCleaner frees the blocks once the result is unreachable.
   */
 object Sketches {
 
@@ -55,8 +58,8 @@ object Sketches {
 
   /** Exact heavy hitters over an unbounded term domain: every term whose
     * frequency × `denom` ≥ N (i.e. freq ≥ N/denom), found WITHOUT ever
-    * aggregating the full term domain. Pass 1 folds the stream into one
-    * Misra–Gries summary (`k` counters per partial, k ≥ denom so the
+    * aggregating the full term domain. Pass 1 counts N and folds the stream
+    * into one Misra–Gries summary (`k` counters per partial, k ≥ denom so the
     * superset guarantee freq > N/(k+1) covers the N/denom threshold);
     * pass 2 does the exact count ONLY for the ≤ k candidate terms
     * (broadcastable filter — the exact aggregation state is k-bounded, not
@@ -65,15 +68,13 @@ object Sketches {
                    k: Int = 256): DataFrame = {
     require(k >= denom, s"k=$k must be >= denom=$denom for the MG superset guarantee")
     import terms.sparkSession.implicits._
-    // cached: the operator runs THREE actions over `terms` (MG summary,
-    // total count, exact candidate count) — uncached, the term stream's
-    // upstream (tokenize + explode) was re-executed per action, and the
-    // exactness argument leaned on the input replaying deterministically;
-    // the barrier makes all three actions read the same materialized rows
-    val t = terms.cache()
-    val summary = t.select(new MisraGries(k).toColumn).head()
+    // barrier: TWO passes read `terms` (MG summary with the total count,
+    // then the exact candidate count) — without it the term stream's
+    // upstream (tokenize + explode) re-ran per pass, and the exactness
+    // argument leaned on the input replaying deterministically
+    val t = terms.localCheckpoint(eager = false)
+    val (summary, total) = t.select(new MisraGries(k).toColumn, count(lit(1)).as[Long]).head()
     val candidates = summary.keys.toSeq
-    val total = t.count()
     t.toDF("term")
       .where(col("term").isin(candidates: _*))
       .groupBy(col("term")).agg(count(lit(1)).as("n"))

@@ -203,7 +203,8 @@ object SpatialJoin {
     * and the one job that both materializes the unresolved queries'
     * checkpoint and counts them (log-many rounds — ring batches grow ×4).
     * Each superseded checkpoint is released as soon as its successor is
-    * materialized, so only the result's checkpoint outlives the call.
+    * materialized, and the points' checkpoint once the result is, so only
+    * the result's checkpoint outlives the call.
     * Falls back to a full scan for queries unresolved after `maxRings`
     * (correct everywhere incl. poles).
     *
@@ -220,7 +221,7 @@ object SpatialJoin {
     val minCellLatMeters = cellLatDeg * 110574.0 // underestimates m/deg ⇒ conservative
 
     val pts = points.withColumn("_cell", cell_encode(col(latCol), col(lngCol), res))
-      .cache() // re-probed every round; at scale this is the cell-indexed table itself
+      .localCheckpoint(eager = false) // re-probed every round; at scale the cell-indexed table
     // Ring batches grow geometrically, 2, 8, 32, … rings per round (×4
     // growth: each driver round costs a fixed ~0.5 s of job overhead, so
     // fewer-but-wider rounds win; over-probing is bounded by the top-k
@@ -305,7 +306,7 @@ object SpatialJoin {
       release(superseded)
     }
     release(unresolved)
-    pts.unpersist() // acc is materialized: the probe cache can go
+    release(pts) // acc is materialized: the probe side can go
     acc.withColumnRenamed("_qid", qKeyCol)
       .withColumnRenamed("_dist", "dist_m")
       .drop("_cell", "_qlat", "_qlng")

@@ -45,6 +45,12 @@ class JpegSpec extends SparkTestBase {
     assert(r.pixel_sum == 64L * 17 + 64L * 117)
   }
 
+  test("decoding leaves the JVM-wide ImageIO cache flag alone") {
+    val dec = Jpeg.decode(Jpeg.encodeGray(8, 8, (_, _) => 42))
+    assert(dec.pixels.forall(p => (p & 0xff) == 42))
+    assert(javax.imageio.ImageIO.getUseCache, "Jpeg changed ImageIO's process-wide cache setting")
+  }
+
   test("garbage payload fails loudly, not silently") {
     intercept[Exception] { Jpeg.decode(Array[Byte](1, 2, 3, 4)) }
   }

@@ -10,9 +10,9 @@ import graft.functions.ExprUtils.bind
   *  - flagOverlapBloom carries the bloom as a scalar subquery, not a plan
   *    Literal — "What's wrong #2";
   *  - ExprUtils.bind is a pure let-binding (same values, nulls included);
-  *  - a catalog query's sort tail (`SparkEntry.sortedResult`) leaves
-  *    nothing in the CacheManager, and its checkpoint blocks go once the
-  *    result is unreachable.
+  *  - no catalog query that materializes (a sort tail's or an operator's
+  *    checkpoint) leaves anything in the CacheManager, and a sort tail's
+  *    checkpoint blocks go once the result is unreachable.
   */
 class OptimizationR06Spec extends SparkTestBase {
   import spark.implicits._
@@ -92,15 +92,21 @@ class OptimizationR06Spec extends SparkTestBase {
     assert(b.toSeq == Seq(7 * 2, 0, null))
   }
 
-  /** The queries that end in `SparkEntry.sortedResult` and call no operator
-    * that caches (the Dedup pair and d_curate_full tails do). */
+  /** The queries that end in `SparkEntry.sortedResult` and call no
+    * materializing operator. */
   private val sortTails = Seq("d_html_extract", "d_pii_redact", "d_c4_filter",
     "d_gopher_quality", "d_lang_guess", "d_repetition", "d_quality",
     "m_jpeg_decode", "m_resize", "d_curate_e2e", "d_embed_neardup")
 
-  test("sort tails leave nothing in the CacheManager") {
+  /** The queries whose operators put an input behind a checkpoint (Dedup
+    * pairs, heavy hitters, chunk packing, d_curate_full's sample). */
+  private val operatorCheckpoints = Seq("d_chunk_pack", "d_curate_full",
+    "d_dedup_keep_best", "d_dup_clusters", "d_heavy_hitters", "d_jaccard_lowt",
+    "d_jaccard_pairs", "d_minhash_pairs", "d_pack_segments", "d_simhash_pairs")
+
+  test("materializing catalog queries leave nothing in the CacheManager") {
     val cacheManager = spark.sharedState.cacheManager
-    sortTails.foreach { q =>
+    (sortTails ++ operatorCheckpoints).foreach { q =>
       spark.catalog.clearCache()
       assert(SparkEntry.queries(q)(spark, sfDir).collect().nonEmpty, q)
       assert(cacheManager.isEmpty, s"$q left a cached relation")
