@@ -20,11 +20,6 @@ import graft.functions.geofunctions._
   */
 object SortedSink {
 
-  /** zstd level range the reference parameterizes (data_downloader.py:
-    * 130-133 passes compression_level to DuckDB's COPY; default 3,
-    * tests exercise 3 vs 22 — test_internals.py:56-83). */
-  final val DefaultZstdLevel = 3
-
   private def writer(df: DataFrame, compression: String, level: Option[Int]) = {
     val w = df.write.mode("overwrite").option("compression", compression)
     // parquet-java reads the zstd level from this conf key; Spark forwards

@@ -25,13 +25,9 @@ object WideForm {
     }.substr(lit(sep.length + 1), lit(Int.MaxValue)) // drop leading sep
   }
 
-  /** One boolean pivot column for a hierarchy combination — F2 parity:
-    * `COALESCE((h1 = 'v1' AND h2 = 'v2'), False)`, NULL levels compared
-    * with IS NULL (wide_form.py:128-143). */
-  def hierarchyPivotCol(levels: Seq[(String, Option[String])], colName: String): Column =
-    coalesce(hierarchyPivotCond(levels), lit(false)).as(colName)
-
-  /** The raw (un-aliased, un-coalesced) combination predicate. */
+  /** The raw (un-aliased, un-coalesced) combination predicate — F2 parity:
+    * `(h1 = 'v1' AND h2 = 'v2')`, NULL levels compared with IS NULL
+    * (wide_form.py:128-143); callers coalesce it to false. */
   private def hierarchyPivotCond(levels: Seq[(String, Option[String])]): Column =
     // depth-0 clip: the single `theme|type` presence column (always true
     // for rows of that pair — reference wide_form.py:446-448)
@@ -73,15 +69,10 @@ object WideForm {
     df.select(keyCols.map(col) ++ pivotCols: _*)
   }
 
-  /** POI category pivot column — F3 parity: primary match OR (unless
-    * primaryOnly) alternate-array membership (wide_form.py:297-311). */
-  def categoryPivotCol(category: String, colName: String, primaryOnly: Boolean,
-                       primaryCol: Column, alternateCol: Column): Column =
-    categoryGroupPivotCol(Seq(category), colName, primaryOnly, primaryCol, alternateCol)
-
-  /** Grouped form: one column per hierarchy prefix, OR over the member
-    * categories' conditions (wide_form.py:297-311 builds exactly this
-    * OR-joined condition list per column_name). */
+  /** POI category pivot column — F3 parity: one column per hierarchy
+    * prefix, true when any member category is the primary OR (unless
+    * primaryOnly) in the alternate array; wide_form.py:297-311 builds
+    * exactly this OR-joined condition list per column_name. */
   def categoryGroupPivotCol(members: Seq[String], colName: String, primaryOnly: Boolean,
                             primaryCol: Column, alternateCol: Column): Column =
     coalesce(members.map { c =>

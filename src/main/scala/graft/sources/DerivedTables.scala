@@ -9,7 +9,8 @@ import graft.functions.GeomConstructors._
   * web pages per BASELINE.json input_hint) derived arithmetically from
   * `lineitem` so that the DuckDB oracle can reproduce the exact same rows
   * with portable integer/IEEE-double SQL — every constant below appears in
-  * BOTH the Spark plan and the oracle SQL in SparkEntry.oracleSql.
+  * BOTH the Spark plan and the oracle SQL of each graft.catalog entry that
+  * reads the table.
   *
   * Determinism notes:
   *  - page_id = l_orderkey*8 + l_linenumber is unique (l_linenumber ≤ 7);

@@ -92,7 +92,7 @@ class OptimizationR06Spec extends SparkTestBase {
     assert(b.toSeq == Seq(7 * 2, 0, null))
   }
 
-  /** The queries that end in `SparkEntry.sortedResult` and call no
+  /** The queries that end in the catalog's `sortedResult` and call no
     * materializing operator. */
   private val sortTails = Seq("d_html_extract", "d_pii_redact", "d_c4_filter",
     "d_gopher_quality", "d_lang_guess", "d_repetition", "d_quality",
