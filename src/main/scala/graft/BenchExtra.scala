@@ -196,11 +196,14 @@ object BenchExtra {
         |dup-span gate, decontamination, stratified sampling and packing
         |in one plan, so its counts are the whole recipe, not one
         |operator; every exchange in it is keyed (zero cartesians).
-        |`d_minhash_pairs` (and the trio built on it) bands on IDS ONLY —
-        |the band self-join's inputs carry (band-key, id), never the
-        |signature array, which is re-joined per candidate pair after the
-        |dedup (spec-asserted in OptimizationR06Spec); the extra bcast and
-        |codegen entries are those re-joins.
+        |Every banded pair operator bands on IDS ONLY through `Dedup`'s one
+        |banding path — `d_minhash_pairs` (and the trio built on it),
+        |`d_jaccard_lowt` and `d_embed_neardup`: the band self-join's inputs
+        |carry (band-key, id), never the signature, shingle set or vector,
+        |which is re-joined per candidate pair after the dedup
+        |(spec-asserted in OptimizationR06Spec); the extra bcast and codegen
+        |entries are those re-joins. `d_simhash_pairs` alone carries its
+        |8-byte fingerprint through its band exchange.
         |
         || query | shuffles | bcasts | sorts | cartesian | codegen | pushed |
         ||---|---|---|---|---|---|---|""".stripMargin

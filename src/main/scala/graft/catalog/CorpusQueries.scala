@@ -136,7 +136,7 @@ object CorpusQueries {
   /** Full MinHash+LSH oracle: Kirsch–Mitzenmacher lane family (one md5 →
     * two 60-bit halves → 32 lanes) → 16 band buckets → distinct candidate
     * pairs → est-jaccard verify. Mirrors
-    * Dedup.minhashLshPairs(laneHashes = portableLaneHashes(32)) exactly. */
+    * Dedup.minhashLshPairs(signature = Dedup.minhashSignaturePortable) exactly. */
   private val minhashCtes: String = {
     val h1 = hexFoldSql("s", 1)
     val h2 = hexFoldSql("s", 17)

@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.geofunctions._
-import graft.geo.{Cell, Wkb}
+import graft.geo.Cell
 
 /** Cell-prefix spatial index — the engine's analog of the reference's
   * per-row-group bbox index (overturemaestro/_generate_bbox_index.py:75-105,

@@ -33,14 +33,21 @@ object CorpusOps {
     * decontamination, where a false keep is the costly error). */
   def flagOverlap(train: DataFrame, eval: DataFrame, textCol: String,
                   idCol: String, n: Int): DataFrame = {
-    def shingleHashes(df: DataFrame) = df
-      .select(col(idCol), explode(Dedup.shingles(col(textCol), n)).as("_sh"))
-      .select(col(idCol), Dedup.hash60(col("_sh")).as("_h"))
-    val evalHashes = shingleHashes(eval).select(col("_h")).distinct()
-    shingleHashes(train)
+    val (trainHashes, evalHashes) = overlapHashes(train, eval, textCol, idCol, n)
+    trainHashes
       .join(broadcast(evalHashes), "_h")
       .groupBy(col(idCol))
       .agg(countDistinct(col("_h")).as("n_shared"))
+  }
+
+  /** The overlap sweep's two sides: every train doc's n-token shingles as
+    * (idCol, `_h` = 60-bit hash) rows, and the eval side's distinct hashes. */
+  private def overlapHashes(train: DataFrame, eval: DataFrame, textCol: String,
+                            idCol: String, n: Int): (DataFrame, DataFrame) = {
+    def shingleHashes(df: DataFrame) = df
+      .select(col(idCol), explode(Dedup.shingles(col(textCol), n)).as("_sh"))
+      .select(col(idCol), Dedup.hash60(col("_sh")).as("_h"))
+    (shingleHashes(train), shingleHashes(eval).select(col("_h")).distinct())
   }
 
   /** [[flagOverlap]]'s scale path for when the eval/benchmark shingle set
@@ -61,10 +68,7 @@ object CorpusOps {
     import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal, ScalarSubquery}
     import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
     import org.apache.spark.sql.graftbridge.{toColumn, toExpression}
-    def shingleHashes(df: DataFrame) = df
-      .select(col(idCol), explode(Dedup.shingles(col(textCol), n)).as("_sh"))
-      .select(col(idCol), Dedup.hash60(col("_sh")).as("_h"))
-    val evalHashes = shingleHashes(eval).select(col("_h")).distinct()
+    val (trainHashes, evalHashes) = overlapHashes(train, eval, textCol, idCol, n)
     val numBits = org.apache.spark.util.sketch.BloomFilter
       .optimalNumOfBits(expectedItems, fpp)
     // The filter rides a SCALAR SUBQUERY, the same shape Spark's own
@@ -80,7 +84,7 @@ object CorpusOps {
         .as("_bf"))
     val bloomSub = ScalarSubquery(
       bloomAgg.queryExecution.analyzed)
-    val prefiltered = shingleHashes(train).where(toColumn(
+    val prefiltered = trainHashes.where(toColumn(
       BloomFilterMightContain(bloomSub, toExpression(col("_h")))))
     prefiltered.join(evalHashes, "_h")
       .groupBy(col(idCol))

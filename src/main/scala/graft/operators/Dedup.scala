@@ -190,45 +190,65 @@ object Dedup {
                       threshold: Double = 0.5,
                       signature: (Column, Int) => Column = minhashSignatureFromShingles): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    val rowsPerBand = numHashes / bands
-    // materialization barrier: the shingle array feeds the signature
-    // aggregate; without it CollapseProject re-runs the regex tokenization
-    // per consumer. (At 10^12 scale: a reliable checkpoint or a table.)
-    // Docs too short to produce one shingle are EXCLUDED: they have no
-    // fingerprint in this family, and the all-sentinel signature would
-    // otherwise bucket every short doc together — M²/2 spurious
-    // est_jaccard=1.0 pairs of unrelated texts plus a one-bucket hot key.
-    val sh = df.select(col(idCol).as("_id"),
-      shingles(col(textCol), shingleLen).as("_sh"))
-      .where(size(col("_sh")) > 0).localCheckpoint(eager = false)
-    // barrier: `sig` feeds both band sides and both per-pair re-joins
-    val sig = sh.select(col("_id"),
-      signature(col("_sh"), numHashes).as("_sig"))
-      .localCheckpoint(eager = false)
-    // IDS-ONLY band exchange (the discipline embeddingNearDupPairs and
-    // ngramJaccardPairsMinhashVerify already follow): the self-join and
-    // the pair-dedup carry (band-key, id) — 8 bytes of id, never the
-    // numHashes×8-byte signature. At 10^12 docs the signature-carrying
-    // variant shipped ~8 KB/doc ×bands through its widest shuffle (~100×
-    // this exchange); signatures are re-joined per CANDIDATE PAIR after
-    // dropDuplicates, which is bounded by the (much smaller) candidate
-    // count. Results identical: est_jaccard is a pure function of the two
-    // signatures, computed once per pair either way.
-    val banded = sig.withColumn("_band",
-        explode(bandKeys(col("_sig"), bands, rowsPerBand)))
-      .select(col("_id"), col("_band.b").as("_b"), col("_band.h").as("_h"))
-    val cand = banded.select(col("_id").as("id_a"), col("_b"), col("_h"))
-      .join(banded.select(col("_id").as("id_b"), col("_b"), col("_h")), Seq("_b", "_h"))
-      .where(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-      .dropDuplicates("id_a", "id_b")
-    cand
-      .join(sig.select(col("_id").as("id_a"), col("_sig").as("_sig_a")), Seq("id_a"))
-      .join(sig.select(col("_id").as("id_b"), col("_sig").as("_sig_b")), Seq("id_b"))
+    val (_, sig) = shingleSignatures(df, textCol, idCol, shingleLen, numHashes, signature)
+    val cand = bandPairs(sig, explode(bandKeys(col("_sig"), bands, numHashes / bands)))
+    withBothEnds(cand, sig, "_sig")
       .select(col("id_a"), col("id_b"),
         (size(filter(zip_with(col("_sig_a"), col("_sig_b"), (x, y) => x === y), b => b))
           .cast("double") / lit(numHashes)).as("est_jaccard"))
       .where(col("est_jaccard") >= threshold)
+  }
+
+  /** Shingle sets (`_id`, `_sh`) and MinHash signatures (`_id`, `_sig`),
+    * each behind a lazy checkpoint, so CollapseProject cannot re-run the
+    * tokenization inside the signature aggregate, nor the aggregate in each
+    * band side and re-join. Docs too short for one shingle are EXCLUDED: their
+    * all-sentinel signatures would bucket every short doc together — M²/2
+    * spurious pairs of unrelated texts plus a one-bucket hot key. */
+  private def shingleSignatures(df: DataFrame, textCol: String, idCol: String,
+                                shingleLen: Int, numHashes: Int,
+                                signature: (Column, Int) => Column): (DataFrame, DataFrame) = {
+    val sh = df.select(col(idCol).as("_id"),
+        shingles(col(textCol), shingleLen).as("_sh"))
+      .where(size(col("_sh")) > 0).localCheckpoint(eager = false)
+    val sig = sh.select(col("_id"), signature(col("_sh"), numHashes).as("_sig"))
+      .localCheckpoint(eager = false)
+    (sh, sig)
+  }
+
+  /** The banding path of every LSH pair operator but [[simhashPairs]]:
+    * `band` generates each `_id`'s band keys, and the self-join on them
+    * yields the distinct candidate pairs (id_a, id_b), id_a < id_b. IDS ONLY
+    * cross this, the plan's widest exchange (`bands` rows per doc): a
+    * signature carried through it would cost `bands` copies per doc (~100×
+    * the exchange at 64 lanes), while callers re-join their payload per
+    * candidate pair ([[withBothEnds]]), bounded by the candidate count. */
+  private def bandPairs(df: DataFrame, band: Column): DataFrame = {
+    val banded = df.select(col("_id"), band.as("_band"))
+    banded.select(col("_id").as("id_a"), col("_band"))
+      .join(banded.select(col("_id").as("id_b"), col("_band")), Seq("_band"))
+      .where(col("id_a") < col("id_b"))
+      .select("id_a", "id_b")
+      .dropDuplicates("id_a", "id_b")
+  }
+
+  /** Joins `side`'s columns `cols` (keyed by `_id`) onto both ends of each
+    * (id_a, id_b) pair: column `c` arrives as `c_a` and `c_b`. */
+  private def withBothEnds(pairs: DataFrame, side: DataFrame, cols: String*): DataFrame = {
+    def end(e: String) =
+      side.select(col("_id").as(s"id_$e") +: cols.map(c => col(c).as(s"${c}_$e")): _*)
+    pairs.join(end("a"), Seq("id_a")).join(end("b"), Seq("id_b"))
+  }
+
+  /** Band keys of a bit-packed signature: one struct(b, v) per band `b`,
+    * `v` the signature's bits [b·bandBits, (b+1)·bandBits), exploded to one
+    * row per band. `sig` should be a column reference: the expression is
+    * repeated once per band. */
+  private[operators] def bitBands(sig: Column, bands: Int, bandBits: Int): Column = {
+    val mask = lit((1L << bandBits) - 1)
+    explode(array((0 until bands).map { b =>
+      struct(lit(b).as("b"), shiftright(sig, b * bandBits).bitwiseAND(mask).as("v"))
+    }: _*))
   }
 
   /** SimHash width: 60 bits (not 64) so every bit comes from the portable
@@ -269,14 +289,18 @@ object Dedup {
     * `bands - d` segments — so candidates are complete iff
     * `maxHamming < bands` (enforced). The classic Google configuration is
     * 4 bands of 15/16 bits for d ≤ 3; a larger budget needs more, narrower
-    * bands (e.g. d=10 → 12 bands of 5 bits) at the cost of bigger buckets. */
+    * bands (e.g. d=10 → 12 bands of 5 bits) at the cost of bigger buckets.
+    *
+    * The one banded operator with its own self-join instead of
+    * [[bandPairs]]: its payload is the 8-byte fingerprint itself, so it
+    * rides the band exchange next to the id, the Hamming verify runs on the
+    * joined rows and the dedup follows it. Going ids-only would add the
+    * two per-pair fingerprint re-joins to save 8 bytes a row. */
   def simhashPairs(df: DataFrame, textCol: String, idCol: String,
                    maxHamming: Int = 3, bands: Int = 4): DataFrame = {
     require(maxHamming < bands,
       s"pigeonhole recall needs bands > maxHamming (got bands=$bands, maxHamming=$maxHamming)")
     require(SimHashBits % bands == 0, s"bands must divide $SimHashBits")
-    val bandBits = SimHashBits / bands
-    val bandMask = (1L << bandBits) - 1
     // zero-token docs are excluded: they'd all get fingerprint 0 and pair
     // with each other at Hamming 0 (same artifact as the MinHash sentinel).
     // Barriers: `th` keeps CollapseProject from inlining the tokenization
@@ -286,40 +310,16 @@ object Dedup {
       .where(size(col("_th")) > 0).localCheckpoint(eager = false)
     val fp = th.select(col("_id"), simhashFromHashes(col("_th")).as("_fp"))
       .localCheckpoint(eager = false)
-    val banded = fp.withColumn("_q", explode(array((0 until bands).map { q =>
-      struct(lit(q).as("q"), shiftright(col("_fp"), q * bandBits).bitwiseAND(lit(bandMask)).as("v"))
-    }: _*)))
-    val l = banded.select(col("_id").as("id_a"), col("_fp").as("_fa"), col("_q"))
-    val r = banded.select(col("_id").as("id_b"), col("_fp").as("_fb"), col("_q"))
-    l.join(r, Seq("_q"))
+    val banded = fp.withColumn("_band", bitBands(col("_fp"), bands, SimHashBits / bands))
+    val l = banded.select(col("_id").as("id_a"), col("_fp").as("_fa"), col("_band"))
+    val r = banded.select(col("_id").as("id_b"), col("_fp").as("_fb"), col("_band"))
+    l.join(r, Seq("_band"))
       .where(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"), hamming64(col("_fa"), col("_fb")).as("hamming"))
       .where(col("hamming") <= maxHamming)
       .distinct()
   }
 
-  /** Exact n-gram Jaccard self-join with PREFIX FILTERING (Bayardo/
-    * Chaudhuri et al. — the published exact algorithm for threshold
-    * similarity joins). Results are identical to the naive
-    * all-pairs-sharing-a-shingle plan; only the CANDIDATE generation
-    * shrinks:
-    *
-    *  1. (id, shingle) distinct, stop-shingle guard (`maxShingleFreq` —
-    *     this one DOES change semantics and defaults high; prefix
-    *     filtering below is what actually tames the blowup, exactly);
-    *  2. global total order on shingles: rarest first (freq asc, shingle
-    *     asc) — rare shingles generate few candidate pairs;
-    *  3. per doc keep only the PREFIX of its ordered shingle set, length
-    *     n − ⌈t·n⌉ + 1. Proof sketch: J(A,B) ≥ t forces overlap
-    *     o ≥ t·(|A|+|B|)/(1+t) ≥ t·|A| (using |B| ≥ t·|A|); if A and B
-    *     shared nothing in A's prefix, all common shingles would sit in
-    *     A's suffix of size ⌈t·|A|⌉ − 1 < t·|A| — contradiction. With a
-    *     consistent global order the first common shingle lies in BOTH
-    *     prefixes, so joining prefix-to-prefix is complete;
-    *  4. candidates also pass the size filter min(n) ≥ t·max(n);
-    *  5. exact overlap is then counted ONLY for candidate pairs (the
-    *     candidate list is dimension-sized and broadcast).
-    */
   /** Plan dispatch: the prefix filter prunes candidates by a factor of
     * ~(1−t), so it wins for the dedup-typical thresholds (t ≥ ~0.4). At
     * low thresholds the prefix is nearly the whole set, and the classic
@@ -359,35 +359,27 @@ object Dedup {
   def ngramJaccardPairsMinhashVerify(df: DataFrame, textCol: String, idCol: String,
                                      shingleLen: Int, threshold: Double,
                                      numHashes: Int = 64): DataFrame = {
-    val sh = df.select(col(idCol).as("_id"),
-        shingles(col(textCol), shingleLen).as("_sh"))
-      .where(size(col("_sh")) > 0)
-      .localCheckpoint(eager = false) // read by signature banding + per-pair exact verify
-    // barrier: `banded` feeds BOTH sides of the candidate self-join, and
-    // without it each side re-runs the 64-lane signature aggregate (the
-    // dominant narrow cost) over the checkpointed shingles
-    val sig = sh.select(col("_id"),
-      minhashSignatureFromShingles(col("_sh"), numHashes).as("_sig"))
-      .localCheckpoint(eager = false)
+    val (sh, sig) = shingleSignatures(df, textCol, idCol, shingleLen, numHashes,
+      minhashSignatureFromShingles)
     // r = 1: band key = (lane index, lane value); uniform fan-out of
     // numHashes rows per doc
-    val banded = sig.select(col("_id"),
-      explode(transform(sequence(lit(0), lit(numHashes - 1)),
-        i => struct(i.as("b"), element_at(col("_sig"), i + 1).as("h")))).as("_band"))
-    val cand = banded.select(col("_id").as("id_a"), col("_band"))
-      .join(banded.select(col("_id").as("id_b"), col("_band")), Seq("_band"))
-      .where(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-      .dropDuplicates("id_a", "id_b")
-    // exact verify — identical arithmetic to the prefix plan's tail
-    cand
-      .join(sh.select(col("_id").as("id_a"), col("_sh").as("_seta")), Seq("id_a"))
-      .join(sh.select(col("_id").as("id_b"), col("_sh").as("_setb")), Seq("id_b"))
-      .withColumn("_i", size(array_intersect(col("_seta"), col("_setb"))).cast("double"))
-      .select(col("id_a"), col("id_b"),
-        (col("_i") / (size(col("_seta")) + size(col("_setb")) - col("_i"))).as("jaccard"))
-      .where(col("jaccard") >= threshold)
+    val cand = bandPairs(sig, explode(transform(sequence(lit(0), lit(numHashes - 1)),
+      i => struct(i.as("b"), element_at(col("_sig"), i + 1).as("h")))))
+    exactJaccard(cand, sh, threshold)
   }
+
+  /** The exact verify of both n-gram Jaccard candidate plans: joins the
+    * two full shingle sets (`sets`: `_id`, `_sh`) onto each candidate pair
+    * and intersects them in-expression — no shuffle explosion,
+    * O(|A|+|B|) per candidate. Returns (id_a, id_b, jaccard ≥ threshold). */
+  private def exactJaccard(cand: DataFrame, sets: DataFrame, threshold: Double): DataFrame =
+    withBothEnds(cand, sets, "_sh")
+      // materialize the intersection size once — inlining it into the
+      // jaccard expression would intersect the two sets twice per pair
+      .withColumn("_i", size(array_intersect(col("_sh_a"), col("_sh_b"))).cast("double"))
+      .select(col("id_a"), col("id_b"),
+        (col("_i") / (size(col("_sh_a")) + size(col("_sh_b")) - col("_i"))).as("jaccard"))
+      .where(col("jaccard") >= threshold)
 
   /** Classic inverted-index plan: self-join on shingle → per-pair overlap
     * count (map-side partial) → size join → J filter. Candidates = every
@@ -416,7 +408,28 @@ object Dedup {
       .where(col("jaccard") >= threshold)
   }
 
-  /** Prefix-filter plan (see the theorem sketch above). */
+  /** Exact n-gram Jaccard self-join with PREFIX FILTERING (Bayardo/
+    * Chaudhuri et al. — the published exact algorithm for threshold
+    * similarity joins). Results are identical to the naive
+    * all-pairs-sharing-a-shingle plan; only the CANDIDATE generation
+    * shrinks:
+    *
+    *  1. (id, shingle) distinct, stop-shingle guard (`maxShingleFreq` —
+    *     this one DOES change semantics and defaults high; prefix
+    *     filtering below is what actually tames the blowup, exactly);
+    *  2. global total order on shingles: rarest first (freq asc, shingle
+    *     asc) — rare shingles generate few candidate pairs;
+    *  3. per doc keep only the PREFIX of its ordered shingle set, length
+    *     n − ⌈t·n⌉ + 1. Proof sketch: J(A,B) ≥ t forces overlap
+    *     o ≥ t·(|A|+|B|)/(1+t) ≥ t·|A| (using |B| ≥ t·|A|); if A and B
+    *     shared nothing in A's prefix, all common shingles would sit in
+    *     A's suffix of size ⌈t·|A|⌉ − 1 < t·|A| — contradiction. With a
+    *     consistent global order the first common shingle lies in BOTH
+    *     prefixes, so joining prefix-to-prefix is complete;
+    *  4. candidates also pass the size filter min(n) ≥ t·max(n);
+    *  5. exact overlap is then counted ONLY for candidate pairs (the
+    *     candidate list is dimension-sized and broadcast) by
+    *     [[exactJaccard]]. */
   def ngramJaccardPairsPrefix(df: DataFrame, textCol: String, idCol: String,
                               shingleLen: Int, threshold: Double,
                               maxShingleFreq: Long): DataFrame = {
@@ -444,20 +457,9 @@ object Dedup {
         least(col("_na"), col("_nb")) >= lit(threshold) * greatest(col("_na"), col("_nb")))
       .select(col("id_a"), col("id_b"), col("_na"), col("_nb"))
       .distinct()
-    // exact overlap ONLY for the (dimension-sized) candidate list: join the
-    // two full sets per pair and intersect in-expression — no shuffle
-    // explosion, O(|A|+|B|) per candidate
-    val sets = perDoc.select(col("_id"),
-      transform(col("_arr"), x => x("_sh")).as("_set"))
-    cand
-      .join(sets.select(col("_id").as("id_a"), col("_set").as("_seta")), Seq("id_a"))
-      .join(sets.select(col("_id").as("id_b"), col("_set").as("_setb")), Seq("id_b"))
-      // materialize the intersection size once — inlining it into the
-      // jaccard expression would evaluate array_intersect twice per pair
-      .withColumn("_i", size(array_intersect(col("_seta"), col("_setb"))).cast("double"))
-      .select(col("id_a"), col("id_b"),
-        (col("_i") / (col("_na") + col("_nb") - col("_i"))).as("jaccard"))
-      .where(col("jaccard") >= threshold)
+    // exact overlap ONLY for the (dimension-sized) candidate list
+    exactJaccard(cand,
+      perDoc.select(col("_id"), transform(col("_arr"), x => x("_sh")).as("_sh")), threshold)
   }
 
   /** Embedding-cosine near-duplicate pairs (the vector analog of MinHash
@@ -468,9 +470,9 @@ object Dedup {
     *     signature per row ([[Similarity.lshSignatureQuantized]]);
     *  2. explode to `bands` (band, band-bits) keys per row; candidate
     *     pairs = rows sharing ≥1 band bucket — the self-join is equi-hash
-    *     on the band key (ids only cross the exchange; vectors are
-    *     re-joined per candidate afterwards, so the wide band shuffle
-    *     carries 16 bytes/row, not the embedding);
+    *     on the band key ([[bandPairs]]: ids only cross the exchange;
+    *     vectors are re-joined per candidate afterwards, so the wide band
+    *     shuffle carries 16 bytes/row, not the embedding);
     *  3. EXACT threshold verify in integer arithmetic: cos ≥ t ⟺
     *     dot > 0 ∧ t2d·dot² ≥ t2n·‖a‖²·‖b‖² with t² = t2n/t2d, evaluated
     *     in DECIMAL(38,0) (dot ≤ dim·(10^6)² ≈ 10^14 for unit-scale
@@ -487,37 +489,23 @@ object Dedup {
     val nPlanes = planes.length
     require(nPlanes % bands == 0, "bands must divide the plane count")
     require(t2n >= 0 && t2d > 0 && t2n <= t2d, "need 0 <= t2n/t2d = t^2 <= 1")
-    val bandBits = nPlanes / bands
-    val mask = (1L << bandBits) - 1
     import graft.functions.VectorExpressions.vec_dot_long
     val base = df.select(
       col(idCol).as("_id"),
       transform(col(vecCol), x => round(x.cast("double") * 1000000d).cast("long")).as("_qv"),
       Similarity.lshSignatureQuantized(col(vecCol), planes).as("_sig"))
       .withColumn("_n2", vec_dot_long(col("_qv"), col("_qv")))
-    val bandedIds = base.select(col("_id"), col("_sig"))
-      .withColumn("_band", explode(array((0 until bands).map { b =>
-        struct(lit(b).as("b"),
-          shiftright(col("_sig"), b * bandBits).bitwiseAND(lit(mask)).as("v"))
-      }: _*)))
-      .select(col("_id"), col("_band"))
-    val cand = bandedIds.select(col("_id").as("id_a"), col("_band"))
-      .join(bandedIds.select(col("_id").as("id_b"), col("_band")), Seq("_band"))
-      .where(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-      .dropDuplicates("id_a", "id_b")
+    val cand = bandPairs(base, bitBands(col("_sig"), bands, nPlanes / bands))
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     // dot via the codegen'd vec_dot_long kernel: Spark's HOF form
     // (aggregate+zip_with) is CodegenFallback (~µs/eval) AND gets inlined
     // by CollapseProject into the filter 4× — the native expression makes
     // even the inlined copies ~ns-cheap, so no barrier is needed.
-    val dot = vec_dot_long(col("_qa"), col("_qb"))
-    cand
-      .join(base.select(col("_id").as("id_a"), col("_qv").as("_qa"), col("_n2").as("_na")), Seq("id_a"))
-      .join(base.select(col("_id").as("id_b"), col("_qv").as("_qb"), col("_n2").as("_nb")), Seq("id_b"))
+    val dot = vec_dot_long(col("_qv_a"), col("_qv_b"))
+    withBothEnds(cand, base, "_qv", "_n2")
       .where(dot > 0 &&
         dot.cast(dec) * dot.cast(dec) * lit(t2d).cast(dec) >=
-          col("_na").cast(dec) * col("_nb").cast(dec) * lit(t2n).cast(dec))
+          col("_n2_a").cast(dec) * col("_n2_b").cast(dec) * lit(t2n).cast(dec))
       .select(col("id_a"), col("id_b"), dot.as("dot_q"))
   }
 }

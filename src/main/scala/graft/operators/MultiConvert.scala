@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** Multi-(theme, type) orchestration — the reference's most-used entry
   * points (`convert_*_for_multiple_types`, functions.py:235-366, backed by

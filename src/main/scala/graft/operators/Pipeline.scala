@@ -1,8 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 import graft.functions.geofunctions._
 import graft.geo.{Wkb, Wkt}
 

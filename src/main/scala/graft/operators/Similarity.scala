@@ -119,16 +119,11 @@ object Similarity {
               signature: Column => Column = null): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(nPlanes % bands == 0)
-    val bandBits = nPlanes / bands
-    val mask = (1L << bandBits) - 1
     val sigOf: Column => Column =
       Option(signature).getOrElse((v: Column) => lshSignature(v, nPlanes))
     def banded(df: DataFrame, vecCol: String, prefix: String): DataFrame =
       df.withColumn(s"${prefix}sig", sigOf(col(vecCol)))
-        .withColumn("_band", explode(array((0 until bands).map { b =>
-          struct(lit(b).as("b"),
-            shiftright(col(s"${prefix}sig"), b * bandBits).bitwiseAND(lit(mask)).as("v"))
-        }: _*)))
+        .withColumn("_band", Dedup.bitBands(col(s"${prefix}sig"), bands, nPlanes / bands))
         .drop(s"${prefix}sig")
     val d = banded(data.withColumn("_dnorm", normC(col(dataVecCol))), dataVecCol, "d_")
     val q = banded(queries.withColumn("_qnorm", normC(col(qVecCol))), qVecCol, "q_")

@@ -1,6 +1,5 @@
 package graft
 
-import graft.geo.Wkb
 
 /** CLI argument surface (§3.3 parity: mutual exclusion, AND-folded filters,
   * projection, geometry formats). */

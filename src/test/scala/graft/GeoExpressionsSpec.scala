@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.functions.geofunctions._
-import graft.geo.{Cell, Geo, Hilbert, Tile, Wkb, Wkt}
+import graft.geo.{Cell, Geo, Hilbert, Tile, Wkt}
 
 class GeoExpressionsSpec extends SparkTestBase {
   import spark.implicits._

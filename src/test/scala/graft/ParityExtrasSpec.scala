@@ -7,7 +7,6 @@ import java.nio.file.{Files, Paths}
 
 /** F6/F7/F8/F9/F12 + S7/S8 parity pieces. */
 class ParityExtrasSpec extends SparkTestBase {
-  import spark.implicits._
 
   // ---- F6 canonical geometry hash ----
   test("canonical hash invariant to ring orientation, start rotation, part order") {
