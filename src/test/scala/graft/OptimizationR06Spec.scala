@@ -25,40 +25,47 @@ class OptimizationR06Spec extends SparkTestBase {
     (5L, "unrelated words entirely different content here")
   ).toDF("doc_id", "text")
 
-  test("every banded pair operator's band self-join carries ids only through its exchange") {
+  // no signature, shingle set, quantized vector or raw vector may ride
+  // the band exchange
+  private def payload(c: String) =
+    c.startsWith("_sig") || c.startsWith("_sh") || c.startsWith("_qv") || c == "embedding"
+
+  /** Every join keyed on the band column in `pairs`' optimized plan
+    * exchanges ids only, and the exact duplicate `dup` still comes out. */
+  private def assertIdsOnlyBandJoin(name: String, pairs: org.apache.spark.sql.DataFrame,
+      dup: (Long, Long)): Unit = {
+    val joins = pairs.queryExecution.optimizedPlan.collect {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join
+        if j.condition.exists(_.references.exists(_.name == "_band")) => j
+    }
+    assert(joins.nonEmpty, s"$name: expected a band-keyed self-join in the plan")
+    joins.foreach { j =>
+      val childCols = (j.left.output ++ j.right.output).map(_.name)
+      assert(!childCols.exists(payload),
+        s"$name: band join must exchange ids only, but its inputs carry: $childCols")
+    }
+    val got = pairs.select("id_a", "id_b").as[(Long, Long)].collect().toSet
+    assert(got.contains(dup), s"$name: exact dup pair must survive, got $got")
+  }
+
+  test("minhash band self-join carries no signature column through its exchange") {
+    assertIdsOnlyBandJoin("minhashLshPairs", Dedup.minhashLshPairs(docs, "text", "doc_id",
+      shingleLen = 2, numHashes = 8, bands = 4, threshold = 0.25), (1L, 4L))
+  }
+
+  test("the other banded pair operators carry ids only through their band exchange") {
     val vecs = Seq(
       (1L, Array(1.0f, 0.0f, 0.5f, 0.25f)),
       (2L, Array(1.0f, 0.01f, 0.5f, 0.25f)),
       (3L, Array(-1.0f, 0.7f, -0.2f, 0.9f))
     ).toDF("vec_id", "embedding")
-    val operators = Seq(
-      "minhashLshPairs" -> Dedup.minhashLshPairs(docs, "text", "doc_id",
-        shingleLen = 2, numHashes = 8, bands = 4, threshold = 0.25),
-      "ngramJaccardPairsMinhashVerify" -> Dedup.ngramJaccardPairsMinhashVerify(docs,
-        "text", "doc_id", shingleLen = 2, threshold = 0.25, numHashes = 8),
-      "embeddingNearDupPairs" -> Dedup.embeddingNearDupPairs(vecs, "embedding", "vec_id",
-        t2n = 81, t2d = 100, planes = graft.operators.Similarity.planeMatrix(8, 4), bands = 4))
-    // no signature, shingle set, quantized vector or raw vector may ride
-    // the band exchange
-    def payload(c: String) =
-      c.startsWith("_sig") || c.startsWith("_sh") || c.startsWith("_qv") || c == "embedding"
-    operators.foreach { case (name, pairs) =>
-      // every join keyed on the band column in the optimized plan
-      val joins = pairs.queryExecution.optimizedPlan.collect {
-        case j: org.apache.spark.sql.catalyst.plans.logical.Join
-          if j.condition.exists(_.references.exists(_.name == "_band")) => j
-      }
-      assert(joins.nonEmpty, s"$name: expected a band-keyed self-join in the plan")
-      joins.foreach { j =>
-        val childCols = (j.left.output ++ j.right.output).map(_.name)
-        assert(!childCols.exists(payload),
-          s"$name: band join must exchange ids only, but its inputs carry: $childCols")
-      }
-      // and the results are still the verified near-dup pairs
-      val got = pairs.select("id_a", "id_b").as[(Long, Long)].collect().toSet
-      val dup = if (name == "embeddingNearDupPairs") (1L, 2L) else (1L, 4L)
-      assert(got.contains(dup), s"$name: exact dup pair must survive, got $got")
-    }
+    assertIdsOnlyBandJoin("ngramJaccardPairsMinhashVerify",
+      Dedup.ngramJaccardPairsMinhashVerify(docs, "text", "doc_id",
+        shingleLen = 2, threshold = 0.25, numHashes = 8), (1L, 4L))
+    assertIdsOnlyBandJoin("embeddingNearDupPairs",
+      Dedup.embeddingNearDupPairs(vecs, "embedding", "vec_id",
+        t2n = 81, t2d = 100, planes = graft.operators.Similarity.planeMatrix(8, 4), bands = 4),
+      (1L, 2L))
   }
 
   test("flagOverlapBloom: bloom rides a scalar subquery, not a plan literal") {
