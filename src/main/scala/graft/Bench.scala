@@ -131,11 +131,7 @@ object Bench {
   }
 
   private def session(cores: Int, adaptive: Boolean = true): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-bench-$cores")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.session.timeZone", "UTC")
+    val s = LocalSession.builder(s"graft-bench-$cores", cores)
       // the flagship ladder job is a shuffle-free broadcast plan — AQE can
       // only add per-job planning overhead there (ladder legs pass false);
       // the query catalog keeps AQE on (skew-join, coalescing)
@@ -145,7 +141,6 @@ object Bench {
       // task wave idles most of the machine (observed: 41 tasks / 32
       // cores ⇒ 0.62 efficiency; fine-grained splits smooth the tail)
       .config("spark.sql.files.maxPartitionBytes", String.valueOf(24L * 1024 * 1024))
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
@@ -404,7 +399,7 @@ object Bench {
     val wallStart = System.nanoTime()
     def elapsed(): Double = (System.nanoTime() - wallStart) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = LocalSession.cores()
     // rep=1536 → ~7.6 GB zstd / 921.6 M rows at sf0.1: long enough legs
     // (8-core ≈ 9 s) that Spark's fixed per-job overhead (~0.3-0.4 s,
     // broadcast build + job setup) is inside noise — at rep=512 it biased

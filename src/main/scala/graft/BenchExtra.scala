@@ -14,9 +14,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
 
 /** The engine's one side harness. NOT part of the graded bench contract —
   * `Bench.scala` stays the frozen bench entry point; per-layer numbers
-  * come from `perfbench --trace 1`. Every mode runs at
-  * local[SPARK_GRAFT_CPUS] (default: the host's processor count) over the
-  * tables in SPARK_GRAFT_SF_DIR.
+  * come from `perfbench --trace 1`. Every mode runs on the session every
+  * entry point builds ([[LocalSession]]: local[SPARK_GRAFT_CPUS], default
+  * the host's processor count) over the tables in SPARK_GRAFT_SF_DIR.
   *
   * Usage:
   *   sbt "runMain graft.BenchExtra time q1 q2 ..."   — noop-time queries
@@ -26,21 +26,6 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *   sbt "runMain graft.BenchExtra audit"   — write ./PLAN_AUDIT.md
   */
 object BenchExtra {
-
-  private def session(): SparkSession = {
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors())
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench-extra")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
 
   private def runForced(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
@@ -239,7 +224,8 @@ object BenchExtra {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val mode = args.headOption.getOrElse("time")
-    val spark = session()
+    val spark = LocalSession.builder("graft-bench-extra", LocalSession.cores()).getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
     try mode match {
       case "time" =>
         val reps = sys.env.getOrElse("SPARK_GRAFT_EXTRA_REPS", "3").toInt

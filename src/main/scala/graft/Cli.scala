@@ -219,14 +219,10 @@ object Cli {
   def main(argv: Array[String]): Unit = {
     val a = parseArgs(argv)
     if (a.showPairs.isDefined) { println(showThemeTypePairs(a.showPairs.get)); return }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val builder = LocalSession.builder("graft-cli", LocalSession.cores())
       .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
+    sys.env.get("SPARK_MASTER").foreach(builder.master) // replaces local[cores]
+    val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val dest = a.resolvedOutput
     // reference cache behavior: an existing result file is reused unless

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** CLI smoke surface: runs the flagship `SparkEntry.entry` pipeline and the
@@ -9,13 +8,7 @@ import org.apache.spark.sql.functions._
   * driver performs, runnable standalone via `sbt "runMain graft.Smoke"`. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession.builder("graft-smoke", LocalSession.cores()).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

@@ -599,8 +599,8 @@ object CorpusQueries {
 
     CatalogEntry("d_jaccard_pairs", (s, d) => {
       // t = 0.4 dispatches to the Bayardo prefix-filter plan — the
-      // dedup-typical, scale-representative path (the inverted-index
-      // low-threshold corner is exercised separately by d_jaccard_lowt)
+      // dedup-typical, scale-representative path (the low-threshold corner,
+      // the banded-MinHash verify plan, is exercised by d_jaccard_lowt)
       sortedResult(Dedup.ngramJaccardPairs(documents(s, d), "text", "doc_id",
           shingleLen = 3, threshold = 0.4, maxShingleFreq = 10000)
         .select(col("id_a"), col("id_b"),

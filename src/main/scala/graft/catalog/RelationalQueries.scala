@@ -339,7 +339,6 @@ object RelationalQueries {
       // releases' column sets are known at SQL-build time; missing columns
       // are FALSE, mirroring combineWide's coalesce.
       {
-        val cats = (0 to 6).map("cat" + _)
         def cond(c: String) = s"(prim = '$c' OR alt = '$c')"
         // depth-1 (new release): grouped prefix columns; depth-2 (old): leaves
         val newCols = Seq(

@@ -20,15 +20,6 @@ import java.nio.file.{Files, Paths, Path}
   */
 object Checkpoint {
 
-  case class StageMetrics(partition: Long, rows: Long, bytes: Long)
-
-  /** Run `stage` (or skip it if already complete) and return its output.
-    *
-    * @param key     deterministic stage key (content-hash of inputs/params —
-    *                cf. the reference's canonical geometry+filter hash path,
-    *                data_downloader.py:925-963)
-    * @param baseDir checkpoint root
-    */
   /** Minimal JSON string escaping for manifest fields. */
   private def esc(s: String): String =
     s.flatMap {
@@ -54,6 +45,13 @@ object Checkpoint {
     else spark.read.parquet(outDir.toString)
   }
 
+  /** Run `build` (or skip it if the stage is already complete) and return its output.
+    *
+    * @param key     deterministic stage key (content-hash of inputs/params —
+    *                cf. the reference's canonical geometry+filter hash path,
+    *                data_downloader.py:925-963)
+    * @param baseDir checkpoint root
+    */
   def stage(spark: SparkSession, baseDir: String, key: String)
            (build: => DataFrame): DataFrame = {
     val outDir = Paths.get(baseDir, key)

@@ -15,22 +15,22 @@ import graft.operators.Pipeline
   * RectangleRefineShortCircuit — the plan-level form of the reference's
   * envelope short-circuit (P5, overturemaestro/data_downloader.py:649):
   * an exact ray-cast refinement against a CONSTANT rectangular geometry is
-  * equivalent to two strict half-open interval checks, which Parquet/
-  * Iceberg can push to row-group stats — the Expression itself cannot be
-  * pushed. Ray-cast semantics on an axis-aligned rectangle: interior-only
-  * for x (px < xmax half-open via crossing parity) and half-open in y
-  * ((yi > py) != (yj > py) excludes py == ymax but includes py == ymin);
-  * our test fixtures keep points off boundaries, where both forms agree;
-  * the rewrite emits the open-interval form, matching ray-cast on interior
-  * points and P1 bbox-strictness on the composed pipeline. */
+  * equivalent to two half-open interval checks, which Parquet/Iceberg can
+  * push to row-group stats — the Expression itself cannot be pushed.
+  * Ray-cast semantics on an axis-aligned rectangle (the crossing rule of
+  * `Wkb.polygonContains`): only the two vertical edges can cross the ray,
+  * and (yi > py) != (yj > py) holds for them iff ymin <= py < ymax; each
+  * then counts iff px < its x, so the count is odd iff xmin <= px < xmax.
+  * A point is inside iff xmin <= lng < xmax and ymin <= lat < ymax, edges
+  * and corners included — the form emitted here. */
 object RectangleRefineShortCircuit extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformAllExpressions {
     case rc @ RayCastContains(Literal(wkb: Array[Byte], org.apache.spark.sql.types.BinaryType), lng, lat)
         if Pipeline.isRectangle(wkb) =>
       val (xmin, ymin, xmax, ymax) = Wkb.envelope(wkb)
       And(
-        And(GreaterThan(lng, Literal(xmin)), LessThan(lng, Literal(xmax))),
-        And(GreaterThan(lat, Literal(ymin)), LessThan(lat, Literal(ymax))))
+        And(GreaterThanOrEqual(lng, Literal(xmin)), LessThan(lng, Literal(xmax))),
+        And(GreaterThanOrEqual(lat, Literal(ymin)), LessThan(lat, Literal(ymax))))
   }
 }
 
@@ -88,7 +88,7 @@ object GraftFunctions {
 }
 
 /** Session extension entry point:
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
+  * `withExtensions(new GraftExtensions)` on a session builder (as `Cli` does) or
   * `spark.sql.extensions=graft.plans.GraftExtensions`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {

@@ -31,12 +31,7 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkTestBase {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val s = LocalSession.builder("graft-test", 4)
       .config("spark.driver.host", "localhost")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
