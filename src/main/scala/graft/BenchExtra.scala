@@ -137,9 +137,11 @@ object BenchExtra {
         |out as a non-adaptive plan has them, because what AQE changes at run
         |time (a join turned into a broadcast, an exchange dropped) depends on
         |which query stage finishes first and so differs between runs.
-        |Subqueries count; a reused exchange does not count again. Jobs an
-        |operator runs on an RDD taken from a plan (the `Components` rounds)
-        |are not SQL executions and do not count.
+        |Subqueries count; a reused exchange does not count again. The
+        |`Components` edge plan (the MinHash band join of `d_dup_clusters`
+        |and `d_dedup_keep_best`) counts as the one execution that runs it
+        |with the first round; the later rounds are RDD jobs, not SQL
+        |executions, and do not count.
         |
         |- shuffles — shuffle exchanges (each a full network pass of its input at scale);
         |- bcasts — broadcast exchanges (dimension sides);
@@ -196,7 +198,7 @@ object BenchExtra {
   }
 
   /** Records the SQL executions that end on `spark`, in the order they end. */
-  private final class Executions(spark: SparkSession) extends QueryExecutionListener {
+  private[graft] final class Executions(spark: SparkSession) extends QueryExecutionListener {
     private val seen = mutable.ArrayBuffer[(String, QueryExecution)]()
     override def onSuccess(action: String, qe: QueryExecution, durationNs: Long): Unit =
       seen.synchronized { seen += action -> qe }
@@ -208,7 +210,7 @@ object BenchExtra {
     }
   }
 
-  private def watching[T](spark: SparkSession)(body: Executions => T): T = {
+  private[graft] def watching[T](spark: SparkSession)(body: Executions => T): T = {
     val ex = new Executions(spark)
     spark.listenerManager.register(ex)
     try body(ex) finally spark.listenerManager.unregister(ex)

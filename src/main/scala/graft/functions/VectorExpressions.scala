@@ -1,8 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.graftbridge.{toColumn, toExpression}
@@ -53,6 +55,56 @@ object VecOps {
     val order = Array.range(0, k).sortBy(x => (negcos(x), ids(x)))
     new org.apache.spark.sql.catalyst.util.GenericArrayData(
       order.take(math.min(n, k)).map(ids(_)))
+  }
+
+  /** `round(x.cast("double") * 1000000d).cast("long")` per element, as
+    * Spark computes it: HALF_UP on the double's shortest decimal form
+    * (`BigDecimal.valueOf`), then the ANSI cast, which fails outside the
+    * long range. Null elements stay null. */
+  def quantizeE6(v: ArrayData): ArrayData = {
+    val n = v.numElements()
+    val out = new Array[Long](n)
+    var nulls = false
+    var i = 0
+    while (i < n) {
+      if (v.isNullAt(i)) nulls = true
+      else {
+        val y = v.getDouble(i) * 1000000d
+        val r = if (y.isNaN || y.isInfinite) y
+          else java.math.BigDecimal.valueOf(y).setScale(0, java.math.RoundingMode.HALF_UP).doubleValue
+        if (!(math.floor(r) <= Long.MaxValue.toDouble && math.ceil(r) >= Long.MinValue.toDouble))
+          throw new ArithmeticException(s"$r cannot be cast to a long")
+        out(i) = r.toLong
+      }
+      i += 1
+    }
+    if (!nulls) UnsafeArrayData.fromPrimitiveArray(out)
+    else new org.apache.spark.sql.catalyst.util.GenericArrayData(
+      Array.tabulate[Any](n)(j => if (v.isNullAt(j)) null else out(j)))
+  }
+
+  /** Random-hyperplane signature of a quantized vector: bit p is set iff
+    * Σ_j qv(j)·planes(p)(j) > 0, the integer projection in ANSI (exact)
+    * arithmetic. As in the `aggregate(zip_with(...))` form it replaces, a
+    * null or missing element (length mismatch) makes the projection null
+    * and the bit 0; a null vector signs 0. */
+  def lshSignature(qv: ArrayData, planes: Array[Array[Int]]): Long = {
+    if (qv == null) return 0L
+    val n = qv.numElements()
+    var sig = 0L
+    var p = 0
+    while (p < planes.length) {
+      val row = planes(p)
+      var acc = 0L
+      var j = 0
+      while (j < n && j < row.length && !qv.isNullAt(j)) {
+        acc = Math.addExact(acc, Math.multiplyExact(qv.getLong(j), row(j).toLong))
+        j += 1
+      }
+      if (j == math.max(n, row.length) && acc > 0) sig |= 1L << p
+      p += 1
+    }
+    sig
   }
 
   /** Away-from-zero half rounding of v·1000 — matches DuckDB `round`
@@ -184,6 +236,47 @@ object VectorExpressions {
       toExpression(vec.cast(ArrayType(DoubleType))),
       centroids.map(_._1).toArray,
       centroids.map(_._2.toArray).toArray, n))
+
+  /** vec_quantize_e6(array<double>) → array<long>: round(x·10^6) per
+    * element ([[VecOps.quantizeE6]]). */
+  case class QuantizeE6(child: Expression) extends UnaryExpression {
+    override def dataType: DataType = ArrayType(LongType,
+      child.dataType.asInstanceOf[ArrayType].containsNull)
+    override def nullSafeEval(v: Any): Any = VecOps.quantizeE6(v.asInstanceOf[ArrayData])
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      defineCodeGen(ctx, ev, v => s"graft.functions.VecOps.quantizeE6($v)")
+    override protected def withNewChildInternal(c: Expression): Expression =
+      copy(child = c)
+  }
+
+  /** lsh_signature(array<long>) → long ([[VecOps.lshSignature]]); the ±1
+    * plane matrix rides as a reference object like NearestCentroids'
+    * centroids. Never null: a null vector signs 0. */
+  case class LshSignature(child: Expression, planes: Array[Array[Int]])
+      extends UnaryExpression {
+    require(planes.length <= 63, "signature packs into one long")
+    override def dataType: DataType = LongType
+    override def nullable: Boolean = false
+    override def eval(input: InternalRow): Any =
+      VecOps.lshSignature(child.eval(input).asInstanceOf[ArrayData], planes)
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val refP = ctx.addReferenceObj("planes", planes, "int[][]")
+      val c = child.genCode(ctx)
+      ev.copy(code = code"""
+        ${c.code}
+        long ${ev.value} = graft.functions.VecOps.lshSignature(
+          ${c.isNull} ? null : ${c.value}, $refP);""", isNull = FalseLiteral)
+    }
+    override protected def withNewChildInternal(c: Expression): Expression =
+      copy(child = c)
+  }
+
+  /** Quantized vector of `vec` (any numeric array, upcast to double). */
+  def vec_quantize_e6(vec: Column): Column =
+    toColumn(QuantizeE6(toExpression(vec.cast(ArrayType(DoubleType)))))
+
+  def lsh_signature(qv: Column, planes: Array[Array[Int]]): Column =
+    toColumn(LshSignature(toExpression(qv), planes))
 
   /** pq_encode(vec) → array<long> of m codes (see [[VecOps.pqEncode]]).
     * Codebooks ride as a plan reference object like NearestCentroids —

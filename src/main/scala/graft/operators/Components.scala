@@ -5,6 +5,7 @@ import org.apache.spark.rdd.{RDD, ShuffledRDD}
 import org.apache.spark.serializer.{KryoSerializer, Serializer}
 import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.catalyst.expressions.XXH64
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 
 /** Distributed connected components over an undirected edge list — the
@@ -72,17 +73,23 @@ object Components {
                           maxRounds: Int = 50, reliableEvery: Int = 0): DataFrame = {
     val spark = edges.sparkSession
     val sc = spark.sparkContext
-    val canonical = edges
+    val qe = edges
       .select(least(col(srcCol), col(dstCol)).cast("long").as("u"),
               greatest(col(srcCol), col(dstCol)).cast("long").as("v"))
       .where(col("u") =!= col("v"))
-      .queryExecution.toRdd
-      .map(r => (r.getLong(0), r.getLong(1)))
-    val part = new EdgePartitioner(math.max(1, canonical.getNumPartitions))
+      .queryExecution
     val ser = new KryoSerializer(sc.getConf)
-    var e = exchange(canonical.flatMap { case (u, v) => both(u, v) }, part, ser)
-    e.localCheckpoint()
-    var prev = signature(e)
+    // the edge plan runs in the first round's job; one recorded SQL
+    // execution around both lets listeners and plan audits see that plan
+    val (part, first, firstSig) = SQLExecution.withNewExecutionId(qe, Some("connectedComponents")) {
+      val canonical = qe.toRdd.map(r => (r.getLong(0), r.getLong(1)))
+      val part = new EdgePartitioner(math.max(1, canonical.getNumPartitions))
+      val e = exchange(canonical.flatMap { case (u, v) => both(u, v) }, part, ser)
+      e.localCheckpoint()
+      (part, e, signature(e))
+    }
+    var e = first
+    var prev = firstSig
     var round = 0
     var done = prev._1 == 0L
     while (!done && round < maxRounds) {

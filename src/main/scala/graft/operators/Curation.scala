@@ -49,7 +49,7 @@ object Curation {
     * rules 1–2). */
   private def keepLine(l: Column, minWords: Int): Column =
     l.rlike("[.!?\"]$") &&
-      size(filter(split(l, "\\s+"), w => length(w) > 0)) >= minWords
+      size(array_remove(split(l, "\\s+"), "")) >= minWords
 
   /** C4 line-level cleaning + document-level keep decision, one struct:
     *

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.TextExpressions
 
 /** Large-scale corpus deduplication operators (training-data pipeline ops;
   * not present in the reference — required engine components per the build
@@ -13,24 +14,19 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** Tokenize to non-empty lowercase word tokens. */
+  /** Tokenize to non-empty lowercase word tokens. `split` never yields a
+    * null element, so removing "" is the `length > 0` filter without its
+    * per-element lambda. */
   def tokens(text: Column): Column =
-    filter(split(lower(text), "[^\\p{L}\\p{N}]+"), t => length(t) > 0)
+    array_remove(split(lower(text), "[^\\p{L}\\p{N}]+"), "")
 
-  /** n-token shingles of a text column (overlapping windows).
-    *
-    * The token array is LET-BOUND ([[graft.functions.ExprUtils.bind]]):
-    * inlining the tokenization tree into the per-window `slice` lambda
-    * re-ran the regex split once per window — O(tokens²) per document
-    * (measured: 7.7 s to shingle the 5000-doc fixture; bound, ~0.3 s). */
+  /** n-token shingles of a text column: the distinct overlapping windows,
+    * joined by " ", in first-occurrence order; empty for null text or
+    * fewer than `n` tokens. One codegen'd kernel
+    * ([[graft.functions.TextOps.shingles]]) over the token array, which is
+    * therefore evaluated once per row. */
   def shingles(text: Column, n: Int): Column =
-    graft.functions.ExprUtils.bind(tokens(text)) { toks =>
-      when(size(toks) >= n,
-        array_distinct(transform(
-          sequence(lit(1), size(toks) - (n - 1)),
-          i => concat_ws(" ", slice(toks, i, lit(n))))))
-        .otherwise(array().cast("array<string>"))
-    }
+    TextExpressions.shingles(tokens(text), n)
 
   /** Portable 60-bit hash: the first 15 hex chars of md5 as a long. Chosen
     * so the DuckDB oracle can reproduce the exact value (md5 + hex fold are
@@ -113,71 +109,40 @@ object Dedup {
         count(lit(1)).as("n_total"))
   }
 
-  /** Default (engine-internal) lane-hash family: per-lane xxhash64 —
-    * element → array of `n` lane hashes. */
-  def xxLaneHashes(n: Int)(s: Column): Column =
-    array((0 until n).map(i => xxhash64(lit(i), s)): _*)
-
-  /** MinHash signature over an ALREADY-MATERIALIZED shingle-array column —
-    * SINGLE PASS: one `aggregate` carries an array<long> accumulator of
-    * `numHashes` running minima, updated lane-wise per element with
-    * `zip_with`. (The naive per-lane `transform`+`array_min` form re-walks
-    * the array `numHashes` times — 32× the traversals — and, worse,
-    * Catalyst's CollapseProject inlines a non-materialized shingle subtree
-    * into every lane; callers must still checkpoint the shingle
-    * column.) Empty shingle arrays yield Long.MaxValue lanes. */
+  /** Default (engine-internal) MinHash signature over a shingle-array
+    * column: lane i is the minimum over the shingles of
+    * `xxhash64(i, shingle)`, computed in one pass by one codegen'd kernel
+    * ([[graft.functions.TextOps.minhashXx]]). Empty shingle arrays yield
+    * Long.MaxValue lanes. */
   def minhashSignatureFromShingles(sh: Column, numHashes: Int): Column =
-    aggregate(
-      sh,
-      array_repeat(lit(Long.MaxValue), numHashes),
-      (acc, s) => zip_with(acc, xxLaneHashes(numHashes)(s), (a, h) => least(a, h)))
+    TextExpressions.minhash_xx(sh, numHashes)
 
   /** Oracle-portable MinHash signature via Kirsch–Mitzenmacher double
     * hashing: ONE md5 per shingle yields two independent 60-bit halves
     * (h1 = hex chars 1-15, h2 = chars 17-31 >> 5), lane_i =
     * (h1 + i·h2) & (2^60 − 1) — the standard k-hashes-from-2 construction,
-    * overflow-free in 63 bits and reproducible in DuckDB.
-    *
-    * The (h1, h2) pair is materialized per element by a dedicated
-    * `transform` BEFORE the aggregate: lambda bodies get no common-
-    * subexpression elimination, so an md5 referenced inside the per-lane
-    * lambda would re-hash the shingle once per lane (measured: 25 s vs
-    * ~3 s at sf0.1). */
-  def minhashSignaturePortable(sh: Column, numHashes: Int): Column = {
-    val hp = transform(sh, s => {
-      val m = md5(to_binary(s, lit("utf-8")))
-      array(conv(substring(m, 1, 15), 16, 10).cast("long"),
-        shiftright(conv(substring(m, 17, 15), 16, 10).cast("long"), 5))
-    })
-    aggregate(
-      hp,
-      array_repeat(lit(Long.MaxValue), numHashes),
-      (acc, p) => zip_with(acc,
-        transform(sequence(lit(0), lit(numHashes - 1)),
-          i => (element_at(p, 1) + i.cast("long") * element_at(p, 2))
-            .bitwiseAND(lit((1L << 60) - 1))),
-        (a, h) => least(a, h)))
-  }
+    * overflow-free in 63 bits and reproducible in DuckDB. One kernel pass
+    * per row ([[graft.functions.TextOps.minhashPortable]]). */
+  def minhashSignaturePortable(sh: Column, numHashes: Int): Column =
+    TextExpressions.minhash_portable(sh, numHashes)
 
   /** LSH band keys of a MinHash signature: one struct(b, h) per band `b`,
     * `h` the band's `rowsPerBand` lane values joined with ",". The raw
     * joined-lane string keeps candidate equality classes exact (and
     * oracle-reproducible). Shared by the batch and streaming LSH plans. */
   def bandKeys(sig: Column, bands: Int, rowsPerBand: Int): Column =
-    transform(sequence(lit(0), lit(bands - 1)),
-      b => struct(b.as("b"),
-        concat_ws(",", transform(slice(sig, b * rowsPerBand + 1, lit(rowsPerBand)),
-          x => x.cast("string"))).as("h")))
+    TextExpressions.band_keys(sig, bands, rowsPerBand)
 
   /** MinHash + LSH banding near-dup candidate pairs, verified by estimated
     * Jaccard (fraction of matching signature positions).
     *
     * Plan shape (the scale path for fuzzy dedup at 10^12 docs):
-    *   1. narrow: signature per doc (single-pass aggregate, no shuffle)
+    *   1. narrow: signature per doc (one single-pass kernel, no shuffle)
     *   2. explode to `bands` rows/doc, band key = the band's lane values
     *      (shuffle key — uniform by construction, no skew)
     *   3. self-join within buckets (docs sharing ≥1 identical band)
     *   4. distinct pairs, then verify on signature agreement ≥ threshold
+    *      (a lane-compare kernel, [[graft.functions.TextOps.agreement]])
     *
     * The band key is the raw joined-lane string so candidate equality
     * classes are exact (and oracle-reproducible); at 100 TB wrap it in a
@@ -190,30 +155,32 @@ object Dedup {
                       threshold: Double = 0.5,
                       signature: (Column, Int) => Column = minhashSignatureFromShingles): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    val (_, sig) = shingleSignatures(df, textCol, idCol, shingleLen, numHashes, signature)
+    val sig = signatures(df, textCol, idCol, shingleLen, numHashes, signature, withSets = false)
     val cand = bandPairs(sig, explode(bandKeys(col("_sig"), bands, numHashes / bands)))
     withBothEnds(cand, sig, "_sig")
       .select(col("id_a"), col("id_b"),
-        (size(filter(zip_with(col("_sig_a"), col("_sig_b"), (x, y) => x === y), b => b))
+        (TextExpressions.sig_agreement(col("_sig_a"), col("_sig_b"))
           .cast("double") / lit(numHashes)).as("est_jaccard"))
       .where(col("est_jaccard") >= threshold)
   }
 
-  /** Shingle sets (`_id`, `_sh`) and MinHash signatures (`_id`, `_sig`),
-    * each behind a lazy checkpoint, so CollapseProject cannot re-run the
-    * tokenization inside the signature aggregate, nor the aggregate in each
-    * band side and re-join. Docs too short for one shingle are EXCLUDED: their
-    * all-sentinel signatures would bucket every short doc together — M²/2
-    * spurious pairs of unrelated texts plus a one-bucket hot key. */
-  private def shingleSignatures(df: DataFrame, textCol: String, idCol: String,
-                                shingleLen: Int, numHashes: Int,
-                                signature: (Column, Int) => Column): (DataFrame, DataFrame) = {
-    val sh = df.select(col(idCol).as("_id"),
-        shingles(col(textCol), shingleLen).as("_sh"))
-      .where(size(col("_sh")) > 0).localCheckpoint(eager = false)
-    val sig = sh.select(col("_id"), signature(col("_sh"), numHashes).as("_sig"))
+  /** MinHash signatures (`_id`, `_sig`, plus the shingle set `_sh` when
+    * `withSets`) behind one lazy checkpoint, which the band side and the
+    * per-pair re-joins all read. The shingles are made in a projection of
+    * their own: the signature and the emptiness test both read them, so
+    * CollapseProject leaves them there and each doc is shingled once.
+    * Docs too short for one shingle are EXCLUDED after the checkpoint:
+    * their all-sentinel signatures would bucket every short doc together —
+    * M²/2 spurious pairs of unrelated texts plus a one-bucket hot key. */
+  private def signatures(df: DataFrame, textCol: String, idCol: String,
+                         shingleLen: Int, numHashes: Int,
+                         signature: (Column, Int) => Column, withSets: Boolean): DataFrame = {
+    val sh = col("_sh")
+    df.select(col(idCol).as("_id"), shingles(col(textCol), shingleLen).as("_sh"))
+      .select(Seq(col("_id"), signature(sh, numHashes).as("_sig"), (size(sh) > 0).as("_ne")) ++
+        (if (withSets) Seq(sh) else Nil): _*)
       .localCheckpoint(eager = false)
-    (sh, sig)
+      .where(col("_ne")).drop("_ne")
   }
 
   /** The banding path of every LSH pair operator but [[simhashPairs]]:
@@ -255,29 +222,12 @@ object Dedup {
     * 60-bit md5 hash and the DuckDB oracle reproduces fingerprints exactly. */
   final val SimHashBits = 60
 
-  private val simhashMasks: Column =
-    array((0 until SimHashBits).map(i => lit(1L << i)): _*)
-
   /** SimHash: 60-bit locality-sensitive fingerprint — bit i of the result is
-    * the sign of Σ_tokens (2·bit_i(hash(token)) − 1). One narrow pass. */
+    * the sign of Σ_tokens (2·bit_i(hash60(token)) − 1). One narrow pass:
+    * one kernel hashes each token and casts all 60 votes
+    * ([[graft.functions.TextOps.simhash60]]). */
   def simhash(text: Column): Column =
-    simhashFromHashes(transform(tokens(text), t => hash60(t)))
-
-  /** SimHash from a materialized token-hash array column — SINGLE PASS: one
-    * `aggregate` carries all 60 bit-vote counters in an array<long>
-    * accumulator (the per-bit-lane form walks the array 60 times).
-    * Materialize the hash array behind a barrier on hot paths (the
-    * CollapseProject caveat). */
-  def simhashFromHashes(hashes: Column): Column = {
-    val votes = aggregate(
-      hashes,
-      array_repeat(lit(0L), SimHashBits),
-      (acc, h) => zip_with(acc, simhashMasks,
-        (a, m) => when(h.bitwiseAND(m) =!= 0, a + 1).otherwise(a - 1)))
-    aggregate(
-      zip_with(votes, simhashMasks, (v, m) => when(v > 0, m).otherwise(lit(0L))),
-      lit(0L), (a, b) => a + b)
-  }
+    TextExpressions.simhash60(tokens(text))
 
   /** Hamming distance between two fingerprints. */
   def hamming64(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
@@ -301,15 +251,16 @@ object Dedup {
     require(maxHamming < bands,
       s"pigeonhole recall needs bands > maxHamming (got bands=$bands, maxHamming=$maxHamming)")
     require(SimHashBits % bands == 0, s"bands must divide $SimHashBits")
-    // zero-token docs are excluded: they'd all get fingerprint 0 and pair
-    // with each other at Hamming 0 (same artifact as the MinHash sentinel).
-    // Barriers: `th` keeps CollapseProject from inlining the tokenization
-    // into the 60-lane vote; `fp` feeds both sides of the band self-join.
-    val th = df.select(col(idCol).as("_id"),
-      transform(tokens(col(textCol)), t => hash60(t)).as("_th"))
-      .where(size(col("_th")) > 0).localCheckpoint(eager = false)
-    val fp = th.select(col("_id"), simhashFromHashes(col("_th")).as("_fp"))
+    // zero-token docs are excluded after the checkpoint: they'd all get
+    // fingerprint 0 and pair with each other at Hamming 0 (same artifact
+    // as the MinHash sentinel). The tokens sit in their own projection, read
+    // by the fingerprint and the emptiness test, so each doc is tokenized
+    // once; the `fp` checkpoint feeds both sides of the band self-join.
+    val tk = col("_tk")
+    val fp = df.select(col(idCol).as("_id"), tokens(col(textCol)).as("_tk"))
+      .select(col("_id"), TextExpressions.simhash60(tk).as("_fp"), (size(tk) > 0).as("_ne"))
       .localCheckpoint(eager = false)
+      .where(col("_ne")).drop("_ne")
     val banded = fp.withColumn("_band", bitBands(col("_fp"), bands, SimHashBits / bands))
     val l = banded.select(col("_id").as("id_a"), col("_fp").as("_fa"), col("_band"))
     val r = banded.select(col("_id").as("id_b"), col("_fp").as("_fb"), col("_band"))
@@ -359,26 +310,26 @@ object Dedup {
   def ngramJaccardPairsMinhashVerify(df: DataFrame, textCol: String, idCol: String,
                                      shingleLen: Int, threshold: Double,
                                      numHashes: Int = 64): DataFrame = {
-    val (sh, sig) = shingleSignatures(df, textCol, idCol, shingleLen, numHashes,
-      minhashSignatureFromShingles)
+    val sig = signatures(df, textCol, idCol, shingleLen, numHashes,
+      minhashSignatureFromShingles, withSets = true)
     // r = 1: band key = (lane index, lane value); uniform fan-out of
     // numHashes rows per doc
-    val cand = bandPairs(sig, explode(transform(sequence(lit(0), lit(numHashes - 1)),
-      i => struct(i.as("b"), element_at(col("_sig"), i + 1).as("h")))))
-    exactJaccard(cand, sh, threshold)
+    val cand = bandPairs(sig,
+      explode(arrays_zip(sequence(lit(0), lit(numHashes - 1)), col("_sig"))))
+    exactJaccard(cand, sig, threshold)
   }
 
   /** The exact verify of both n-gram Jaccard candidate plans: joins the
     * two full shingle sets (`sets`: `_id`, `_sh`) onto each candidate pair
-    * and intersects them in-expression — no shuffle explosion,
-    * O(|A|+|B|) per candidate. Returns (id_a, id_b, jaccard ≥ threshold). */
+    * and scores them with one kernel ([[graft.functions.TextOps.intersectSize]],
+    * O(|A|+|B|) per pair) — no shuffle explosion. The filter lands in the
+    * second re-join's condition and the projection above scores the
+    * survivors again, so a surviving pair is scored twice, a dropped one
+    * once. Returns (id_a, id_b, jaccard ≥ threshold). */
   private def exactJaccard(cand: DataFrame, sets: DataFrame, threshold: Double): DataFrame =
     withBothEnds(cand, sets, "_sh")
-      // materialize the intersection size once — inlining it into the
-      // jaccard expression would intersect the two sets twice per pair
-      .withColumn("_i", size(array_intersect(col("_sh_a"), col("_sh_b"))).cast("double"))
       .select(col("id_a"), col("id_b"),
-        (col("_i") / (size(col("_sh_a")) + size(col("_sh_b")) - col("_i"))).as("jaccard"))
+        TextExpressions.jaccard(col("_sh_a"), col("_sh_b")).as("jaccard"))
       .where(col("jaccard") >= threshold)
 
   /** Classic inverted-index plan: self-join on shingle → per-pair overlap
@@ -450,7 +401,7 @@ object Dedup {
     val prefixLen = (col("_n") - ceil(col("_n") * lit(threshold)) + 1).cast("int")
     val prefix = perDoc
       .select(col("_id"), col("_n"),
-        explode(slice(transform(col("_arr"), x => x("_sh")), lit(1), prefixLen)).as("_sh"))
+        explode(slice(col("_arr")("_sh"), lit(1), prefixLen)).as("_sh"))
     val cand = prefix.select(col("_id").as("id_a"), col("_n").as("_na"), col("_sh"))
       .join(prefix.select(col("_id").as("id_b"), col("_n").as("_nb"), col("_sh")), Seq("_sh"))
       .where(col("id_a") < col("id_b") &&
@@ -459,7 +410,7 @@ object Dedup {
       .distinct()
     // exact overlap ONLY for the (dimension-sized) candidate list
     exactJaccard(cand,
-      perDoc.select(col("_id"), transform(col("_arr"), x => x("_sh")).as("_sh")), threshold)
+      perDoc.select(col("_id"), col("_arr")("_sh").as("_sh")), threshold)
   }
 
   /** Embedding-cosine near-duplicate pairs (the vector analog of MinHash
@@ -489,12 +440,13 @@ object Dedup {
     val nPlanes = planes.length
     require(nPlanes % bands == 0, "bands must divide the plane count")
     require(t2n >= 0 && t2d > 0 && t2n <= t2d, "need 0 <= t2n/t2d = t^2 <= 1")
-    import graft.functions.VectorExpressions.vec_dot_long
-    val base = df.select(
-      col(idCol).as("_id"),
-      transform(col(vecCol), x => round(x.cast("double") * 1000000d).cast("long")).as("_qv"),
-      Similarity.lshSignatureQuantized(col(vecCol), planes).as("_sig"))
-      .withColumn("_n2", vec_dot_long(col("_qv"), col("_qv")))
+    import graft.functions.VectorExpressions.{lsh_signature, vec_dot_long, vec_quantize_e6}
+    // the quantized vector is made once, in its own projection, and read
+    // by the signature, the norm and the re-joins
+    val qv = col("_qv")
+    val base = df.select(col(idCol).as("_id"), vec_quantize_e6(col(vecCol)).as("_qv"))
+      .select(col("_id"), qv, lsh_signature(qv, planes).as("_sig"),
+        vec_dot_long(qv, qv).as("_n2"))
     val cand = bandPairs(base, bitBands(col("_sig"), bands, nPlanes / bands))
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     // dot via the codegen'd vec_dot_long kernel: Spark's HOF form

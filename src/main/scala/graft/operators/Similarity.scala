@@ -95,16 +95,12 @@ object Similarity {
     * integers (round(x · 10^6) as long), projections are INTEGER dot
     * products against a literal ±1 plane matrix — bit-identical across
     * engines (no float-summation-order hazard), and still a valid
-    * sign-random-projection family. */
+    * sign-random-projection family. One codegen'd kernel per row
+    * ([[graft.functions.VecOps.lshSignature]]): the vector is quantized
+    * once, not once per plane. */
   def lshSignatureQuantized(vec: Column, planes: Array[Array[Int]]): Column = {
-    val qv = transform(vec, x => round(x.cast("double") * 1000000d).cast("long"))
-    val bits = planes.zipWithIndex.map { case (row, p) =>
-      val proj = aggregate(
-        zip_with(qv, array(row.map(v => lit(v.toLong)): _*), (x, s) => x * s),
-        lit(0L), (acc, v) => acc + v)
-      when(proj > 0, shiftleft(lit(1L), p)).otherwise(lit(0L))
-    }
-    bits.reduce((a, b) => a.bitwiseOR(b))
+    import graft.functions.VectorExpressions.{lsh_signature, vec_quantize_e6}
+    lsh_signature(vec_quantize_e6(vec), planes)
   }
 
   /** ANN top-k: candidates = data rows sharing a signature band with the

@@ -12,15 +12,14 @@ object TextAnalysis {
   /** Whitespace token count (non-empty runs of non-whitespace chars —
     * tabs/newlines separate tokens too, matching real web text). */
   def tokenCount(text: Column): Column =
-    size(filter(split(text, "\\s+"), t => length(t) > 0))
+    size(array_remove(split(text, "\\s+"), ""))
 
   /** BPE-ish subword count estimate: word tokens + extra splits at
     * letter/digit and case boundaries (a cheap, deterministic proxy for a
     * real tokenizer's token count — enough for length filtering). */
   def subwordCountEstimate(text: Column): Column =
-    size(filter(split(text,
-      "\\s+|(?<=\\p{Ll})(?=\\p{Lu})|(?<=\\p{L})(?=\\p{N})|(?<=\\p{N})(?=\\p{L})"),
-      t => length(t) > 0))
+    size(array_remove(split(text,
+      "\\s+|(?<=\\p{Ll})(?=\\p{Lu})|(?<=\\p{L})(?=\\p{N})|(?<=\\p{N})(?=\\p{L})"), ""))
 
   /** Portable BPE-ish subword estimate: whitespace tokens + case/digit
     * boundary count via NON-OVERLAPPING two-char matches — Java regex and
@@ -105,11 +104,11 @@ object TextAnalysis {
 
   /** Non-empty lines of a document (the unit for duplicate-line signals). */
   def textLines(text: Column): Column =
-    filter(split(text, "\n"), l => length(l) > 0)
+    array_remove(split(text, "\n"), "")
 
   /** Non-empty paragraphs: blank-line-separated blocks. */
   def textParagraphs(text: Column): Column =
-    filter(split(text, "\n{2,}"), p => length(p) > 0)
+    array_remove(split(text, "\n{2,}"), "")
 
   /** Non-overlapping `width`-token chunks of a token array, joined with
     * single spaces — a deterministic synthetic "line" structure for

@@ -13,6 +13,22 @@ object graftbridge {
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** The schema `spark.read.parquet` infers from the parquet data file
+    * `file`, read from its footer here on the driver through Spark's own
+    * converter (Spark's inference reads the same footer in a one-task job). */
+  def parquetFooterSchema(spark: SparkSession,
+                          file: org.apache.hadoop.fs.FileStatus): types.StructType = {
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+      ParquetFooterReader, ParquetToSparkSchemaConverter}
+    val state = spark.asInstanceOf[classic.SparkSession].sessionState
+    val footer = ParquetFooterReader.readFooter(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(file, state.newHadoopConf()),
+      org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(
+      new org.apache.parquet.hadoop.Footer(file.getPath, footer),
+      new ParquetToSparkSchemaConverter(state.conf))
+  }
+
   /** Register a SQL function on an ALREADY-BUILT session (the
     * `withExtensions`/`spark.sql.extensions` path covers session build
     * time; this covers notebooks/tests where the session pre-exists). */

@@ -86,7 +86,7 @@ class DedupSpec extends SparkTestBase {
     }
     // dispatch: below 0.4 ngramJaccardPairs routes to the minhash-verify plan
     val routed = Dedup.ngramJaccardPairs(docs, "text", "doc_id", 3, 0.12, 100000)
-    assert(routed.queryExecution.logical.toString.contains("array_intersect"))
+    assert(routed.queryExecution.logical.toString.contains("jaccard(_sh_a"))
   }
 
   test("minhashLshPairs recalls high-similarity pairs (est-jaccard agreement)") {

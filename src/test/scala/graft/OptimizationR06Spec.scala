@@ -100,8 +100,8 @@ class OptimizationR06Spec extends SparkTestBase {
     val unbound = df.select(
       size(Dedup.tokens(col("t"))).as("n"),
       Dedup.shingles(col("t"), 2).as("sh"))
-    // shingles is itself bind-based now; compare against a hand-rolled
-    // unbound construction of the same windows
+    // shingles is a kernel; compare it against a hand-rolled unbound
+    // lambda construction of the same windows
     val toks = Dedup.tokens(col("t"))
     val naive = df.select(
       size(toks).as("n"),

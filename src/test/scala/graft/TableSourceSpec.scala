@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.GraftListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import graft.sources.{DerivedTables, TableSource}
 
 /** The parquet|iceberg source seam: one session conf flips every
@@ -35,5 +38,24 @@ class TableSourceSpec extends SparkTestBase {
       }
       assert(e.getMessage.contains("parquet or iceberg"))
     } finally spark.conf.set(TableSource.FormatKey, "parquet")
+  }
+
+  test("a parquet table's schema comes from its footer: Spark's schema, and no job") {
+    val tables = new java.io.File(sfDir).listFiles().map(_.getName)
+      .filter(_.endsWith(".parquet")).map(_.stripSuffix(".parquet")).sorted
+    assert(tables.length >= 10, tables.mkString(", "))
+    val jobs = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try tables.foreach { t =>
+      GraftListenerBus.drain(spark.sparkContext)
+      jobs.set(0)
+      val schema = TableSource.table(spark, sfDir, t).schema
+      GraftListenerBus.drain(spark.sparkContext)
+      assert(jobs.get == 0, s"building $t submitted ${jobs.get} job(s)")
+      assert(schema == spark.read.parquet(s"$sfDir/$t.parquet").schema, t)
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 }
