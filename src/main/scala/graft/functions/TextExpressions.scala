@@ -166,6 +166,28 @@ object TextOps {
     if (smallNull && largeNull) hits + 1 else hits
   }
 
+  /** `Dedup.hash60`: the top 60 bits of the string's md5. */
+  private def hash60(md: MessageDigest, s: UTF8String): Long =
+    longAt(md.digest(s.getBytes), 0) >>> 4
+
+  /** `Dedup.hash60` of each string — the top 60 bits of its md5, one
+    * digest per element — with the null elements (whose hash is null)
+    * left out: `filter(transform(sh, hash60), h -> h IS NOT NULL)`. */
+  def hashes60(sh: ArrayData): ArrayData = {
+    val out = new Array[Long](sh.numElements())
+    val md = MessageDigest.getInstance("MD5")
+    var k = 0
+    var j = 0
+    while (j < sh.numElements()) {
+      if (!sh.isNullAt(j)) {
+        out(k) = hash60(md, sh.getUTF8String(j))
+        k += 1
+      }
+      j += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(if (k == out.length) out else java.util.Arrays.copyOf(out, k))
+  }
+
   /** 60-bit SimHash of a token array: token hash = the top 60 bits of its
     * md5 (`Dedup.hash60`), bit i set iff more tokens have bit i set than
     * not. A null token votes −1 on every bit, as its null hash does in the
@@ -175,8 +197,7 @@ object TextOps {
     val md = MessageDigest.getInstance("MD5")
     var j = 0
     while (j < toks.numElements()) {
-      val h = if (toks.isNullAt(j)) 0L
-        else longAt(md.digest(toks.getUTF8String(j).getBytes), 0) >>> 4
+      val h = if (toks.isNullAt(j)) 0L else hash60(md, toks.getUTF8String(j))
       var i = 0
       while (i < 60) {
         votes(i) += (if ((h & (1L << i)) != 0) 1 else -1)
@@ -247,6 +268,15 @@ object TextExpressions {
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
+  /** Null in, null out. */
+  case class Hashes60(child: Expression) extends UnaryExpression {
+    override def dataType: DataType = Lanes
+    override def nullSafeEval(v: Any): Any = TextOps.hashes60(v.asInstanceOf[ArrayData])
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      defineCodeGen(ctx, ev, v => s"graft.functions.TextOps.hashes60($v)")
+    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+  }
+
   case class SimHash60(child: Expression) extends UnaryExpression {
     override def dataType: DataType = LongType
     override def nullSafeEval(v: Any): Any = TextOps.simhash60(v.asInstanceOf[ArrayData])
@@ -298,5 +328,6 @@ object TextExpressions {
   def band_keys(sig: Column, bands: Int, rows: Int): Column = col(BandKeys(ex(sig), bands, rows))
   def sig_agreement(a: Column, b: Column): Column = col(Agreement(ex(a), ex(b)))
   def jaccard(a: Column, b: Column): Column = col(Jaccard(ex(a), ex(b)))
+  def hashes60(sh: Column): Column = col(Hashes60(ex(sh)))
   def simhash60(tokens: Column): Column = col(SimHash60(ex(tokens)))
 }

@@ -1,8 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.TextExpressions
 
 /** Corpus-level DataFrame operators for training-data curation, beyond
   * per-document columns (`TextAnalysis`) and near-dup pairing (`Dedup`):
@@ -41,12 +43,14 @@ object CorpusOps {
   }
 
   /** The overlap sweep's two sides: every train doc's n-token shingles as
-    * (idCol, `_h` = 60-bit hash) rows, and the eval side's distinct hashes. */
+    * (idCol, `_h` = 60-bit hash) rows, and the eval side's distinct hashes.
+    * The shingle array is hashed by one kernel before the explode, so `_h`
+    * is a plain column that filters and joins above read, not an md5 each
+    * of them re-evaluates. */
   private def overlapHashes(train: DataFrame, eval: DataFrame, textCol: String,
                             idCol: String, n: Int): (DataFrame, DataFrame) = {
-    def shingleHashes(df: DataFrame) = df
-      .select(col(idCol), explode(Dedup.shingles(col(textCol), n)).as("_sh"))
-      .select(col(idCol), Dedup.hash60(col("_sh")).as("_h"))
+    def shingleHashes(df: DataFrame) = df.select(col(idCol),
+      explode(TextExpressions.hashes60(Dedup.shingles(col(textCol), n))).as("_h"))
     (shingleHashes(train), shingleHashes(eval).select(col("_h")).distinct())
   }
 
@@ -148,7 +152,9 @@ object CorpusOps {
     * fixed `chunkTokens` context windows; each document maps to the global
     * token interval [tok_start, tok_start + n_tokens) and hence to the
     * chunk range [chunk_first, chunk_last]. Returns
-    * (idCol, n_tokens, tok_start, chunk_first, chunk_last).
+    * (idCol, n_tokens, tok_start, chunk_first, chunk_last). A null text has
+    * null n_tokens and offsets and takes no room; a null id is left out of
+    * the bucketing. The id range (max − min) must fit a long.
     *
     * The global offset is a prefix sum over a total order — the one
     * corpus-scale computation a naive `Window.orderBy(id)` (single
@@ -157,55 +163,68 @@ object CorpusOps {
     * 1. deterministic range bucketing of the id space (uniform min/max
     *    split — correct for ANY monotone bucketing, balance-only concern;
     *    pass more `buckets` at scale so a bucket's rows fit an executor);
-    * 2. one map-side-combined per-bucket token total, collected to the
-    *    driver (`buckets` rows — dimension data) and prefix-summed;
+    * 2. one per-bucket token total, folded into a `buckets`-long array on
+    *    the executors and prefix-summed on the driver;
     * 3. a per-bucket window cumsum shifted by the bucket's prefix, the
-    *    offsets riding along as a broadcast map literal.
-    * Three narrow passes over a 2-column projection; nothing global ever
-    * sorts. */
+    *    offsets riding along as an array literal.
+    * The bucket is integral division on both sides — the `_b` column and
+    * the driver's fold — so the two agree for every long id. Nothing
+    * global ever sorts. */
   def packChunks(df: DataFrame, textCol: String, idCol: String,
                  chunkTokens: Int, buckets: Int = 32): DataFrame = {
     require(chunkTokens > 0 && buckets > 0)
-    def floorDiv(x: Column, d: Column): Column =
-      ((x - pmod(x, d)) / d).cast("long") // nonneg x throughout
-    // barrier: this operator runs three actions over `toks` (the id-bounds
-    // head(), the per-bucket totals collect(), and the final windowed
-    // plan) — without it each re-executed the ENTIRE upstream plan
-    // (for the composed d_curate_full recipe that upstream is the whole
-    // dup-span gate + decontamination + sampling pipeline, recomputed 3×).
+    // barrier: the id bounds, the per-bucket totals and the final windowed
+    // plan all read `toks` — without it each re-executed the ENTIRE
+    // upstream plan (for the composed d_curate_full recipe that upstream
+    // is the whole dup-span gate + decontamination + sampling pipeline).
+    // The bounds and the totals are one RDD job each over the checkpoint:
+    // the first materializes it, and neither shuffles.
     val toks = df.select(col(idCol).cast("long").as(idCol),
       size(Dedup.tokens(col(textCol))).cast("long").as("n_tokens"))
       .localCheckpoint(eager = false)
-    val bounds = toks.agg(min(col(idCol)), max(col(idCol))).head()
-    if (bounds.isNullAt(0))
+    val rows = toks.queryExecution.logical.asInstanceOf[LogicalRDD].rdd
+    // one recorded SQL execution around both jobs, so listeners and plan
+    // audits see them
+    val (minId, width, totals) =
+      SQLExecution.withNewExecutionId(toks.queryExecution, Some("packChunks")) {
+        val (lo, hi) = rows.aggregate((Long.MaxValue, Long.MinValue))(
+          (m, r) => if (r.isNullAt(0)) m
+            else (math.min(m._1, r.getLong(0)), math.max(m._2, r.getLong(0))),
+          (a, b) => (math.min(a._1, b._1), math.max(a._2, b._2)))
+        if (lo > hi) (lo, 1L, Array.empty[Long]) // no id: nothing to pack
+        else {
+          val w = Math.subtractExact(hi, lo) / buckets + 1
+          (lo, w, rows.aggregate(new Array[Long](buckets))(
+            (t, r) => {
+              if (!r.isNullAt(0) && !r.isNullAt(1))
+                t(((r.getLong(0) - lo) / w).toInt) += r.getLong(1)
+              t
+            },
+            (a, b) => { for (i <- a.indices) a(i) += b(i); a }))
+        }
+      }
+    if (totals.isEmpty)
       return toks.select(col(idCol), col("n_tokens"),
         lit(0L).as("tok_start"), lit(0L).as("chunk_first"),
         lit(0L).as("chunk_last")).limit(0)
-    val (minId, maxId) = (bounds.getLong(0), bounds.getLong(1))
-    val width = math.max(1L, (maxId - minId) / buckets + 1)
-    val bucketed = toks.withColumn("_b",
-      floorDiv(col(idCol) - lit(minId), lit(width)))
-    val totals = bucketed.groupBy(col("_b"))
-      .agg(sum(col("n_tokens")).as("_t"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-    val prefix: Map[Long, Long] = {
-      var acc = 0L
-      totals.map { case (b, t) => val p = b -> acc; acc += t; p }.toMap
-    }
+    val bucketed = toks.withColumn("_b", div(col(idCol) - lit(minId), lit(width)))
+    val prefix = totals.scanLeft(0L)(_ + _).init
     val w = Window.partitionBy(col("_b")).orderBy(col(idCol))
     val c = lit(chunkTokens.toLong)
     bucketed
       .withColumn("tok_start",
-        element_at(typedLit(prefix), col("_b")) +
+        element_at(typedLit(prefix), (col("_b") + 1).cast("int")) +
           sum(col("n_tokens")).over(w) - col("n_tokens"))
-      .withColumn("chunk_first", floorDiv(col("tok_start"), c))
+      .withColumn("chunk_first", div(col("tok_start"), c))
       .withColumn("chunk_last",
-        when(col("n_tokens") > 0,
-          floorDiv(col("tok_start") + col("n_tokens") - 1, c))
+        when(col("n_tokens") > 0, div(col("tok_start") + col("n_tokens") - 1, c))
           .otherwise(col("chunk_first")))
       .select(col(idCol), col("n_tokens"), col("tok_start"),
         col("chunk_first"), col("chunk_last"))
   }
+
+  /** Integral division: floor for the non-negative operands it gets here. */
+  private def div(x: Column, d: Column): Column = call_function("div", x, d)
 
   /** The loader-facing completion of [[packChunks]]: one row per
     * (chunk, document) overlap — a document spanning a chunk boundary

@@ -334,13 +334,16 @@ object Dedup {
 
   /** Classic inverted-index plan: self-join on shingle → per-pair overlap
     * count (map-side partial) → size join → J filter. Candidates = every
-    * pair sharing ANY (non-stop) shingle. */
+    * pair sharing ANY (non-stop) shingle.
+    *
+    * `idCol` must be a key of `df`: [[shingles]] emits each window once
+    * per row, so the (id, shingle) rows are distinct only when no two rows
+    * share an id. */
   def ngramJaccardPairsInverted(df: DataFrame, textCol: String, idCol: String,
                                 shingleLen: Int, threshold: Double,
                                 maxShingleFreq: Long): DataFrame = {
     val ds = df.select(col(idCol).as("_id"),
         explode(shingles(col(textCol), shingleLen)).as("_sh"))
-      .distinct()
       .localCheckpoint(eager = false) // read by sizes, frequency filter, self-join (both sides)
     val filtered = ds.join(
       ds.groupBy(col("_sh")).agg(count(lit(1)).as("_f"))
@@ -365,7 +368,9 @@ object Dedup {
     * all-pairs-sharing-a-shingle plan; only the CANDIDATE generation
     * shrinks:
     *
-    *  1. (id, shingle) distinct, stop-shingle guard (`maxShingleFreq` —
+    *  1. (id, shingle) rows — distinct without a shuffle, because
+    *     [[shingles]] emits each window once per row and `idCol` must be a
+    *     key of `df` — and the stop-shingle guard (`maxShingleFreq` —
     *     this one DOES change semantics and defaults high; prefix
     *     filtering below is what actually tames the blowup, exactly);
     *  2. global total order on shingles: rarest first (freq asc, shingle
@@ -386,7 +391,6 @@ object Dedup {
                               maxShingleFreq: Long): DataFrame = {
     val ds = df.select(col(idCol).as("_id"),
         explode(shingles(col(textCol), shingleLen)).as("_sh"))
-      .distinct()
       .localCheckpoint(eager = false) // read by freq and perDoc: shingling runs once
     val freq = ds.groupBy(col("_sh")).agg(count(lit(1)).as("_f"))
       .where(col("_f") <= maxShingleFreq)

@@ -36,20 +36,17 @@ object DerivedTables {
     TableSource.table(spark, dir, "region")
   def part(spark: SparkSession, dir: String): DataFrame =
     TableSource.table(spark, dir, "part")
-  /** The sf fixtures are single small parquet files — ONE scan split, so
-    * without this every text/embedding operator runs single-threaded
-    * (measured on a 4-core host, warm, median of 6: shingling the 5000
-    * sf0.1 docs takes 0.25 s on the one split and 0.20 s over four with the
-    * shingle kernel; the lambda form it replaced took 0.36 s and 0.21 s).
-    * Real corpora arrive as thousands of row groups; the round-robin
-    * repartition emulates that layout at test scale. (The tiny shuffle is
-    * the whole table — KBs here; on real multi-split input, drop it.) */
+  /** The corpus tables are read as stored: the scan's own splits set the
+    * parallelism, as they do for a real corpus of many row groups. A
+    * fixture kept as one small row group (`documents` at sf0.1 holds 5000
+    * rows in one) therefore scans as one task, and the first keyed
+    * exchange above it spreads the work; a round-robin repartition here
+    * would cost every read an extra shuffle of the full text, an extra
+    * adaptive query stage and its job. */
   def documents(spark: SparkSession, dir: String): DataFrame =
     TableSource.table(spark, dir, "documents")
-      .repartition(spark.sparkContext.defaultParallelism)
   def embeddings(spark: SparkSession, dir: String): DataFrame =
     TableSource.table(spark, dir, "embeddings")
-      .repartition(spark.sparkContext.defaultParallelism)
   def events(spark: SparkSession, dir: String): DataFrame =
     TableSource.table(spark, dir, "events")
 

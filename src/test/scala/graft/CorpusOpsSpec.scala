@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import graft.operators.CorpusOps
 
 /** Corpus-level curation operators: benchmark decontamination and
@@ -175,6 +177,40 @@ class CorpusOpsSpec extends SparkTestBase {
           chunkTokens = 64, buckets = buckets)
         .as[(Long, Long, Long, Long, Long)].collect().toSet
       assert(got == expected, s"buckets=$buckets")
+    }
+  }
+
+  test("packChunks matches the sequential layout on degenerate inputs") {
+    // the sequential oracle: id order, a null text takes no room and has
+    // null counts and offsets
+    def oracle(docs: Seq[(Long, String)], c: Long): Set[Row] = {
+      var acc = 0L
+      docs.sortBy(_._1).map {
+        case (id, null) => Row(id, null, null, null, null)
+        case (id, text) =>
+          val n = text.split(" ").count(_.nonEmpty).toLong
+          val start = acc; acc += n
+          Row(id, n, start, start / c, if (n > 0) (start + n - 1) / c else start / c)
+      }.toSet
+    }
+    val big = 1L << 53
+    val cases = Seq(
+      "empty" -> Seq.empty[(Long, String)],
+      "one row" -> Seq(5L -> "a b c"),
+      "null text" -> Seq(1L -> "a b", 2L -> null, 3L -> "c d e", 4L -> "", 9L -> null),
+      "negative ids" -> (-40L to 40L by 3).map(i => i -> Seq.fill((i.abs % 7 + 1).toInt)("w").mkString(" ")),
+      "ids >= 2^53" -> (0L until 60L).map(i => (big + i * 1234567L + i % 3) -> ("x " * (i % 5 + 1).toInt).trim),
+      "ids near 2^62" -> (0L until 60L).map(i => ((1L << 62) - i * 987654321L) -> ("y " * (i % 4 + 1).toInt).trim),
+      "both signs, wide" -> Seq(-(1L << 61) -> "a b", -5L -> "c", 0L -> "d e f", 3L -> "g", (1L << 61) -> "h i"))
+    val schema = Seq("doc_id", "n_tokens", "tok_start", "chunk_first", "chunk_last")
+      .map(StructField(_, LongType))
+    val input = StructType(Seq(StructField("doc_id", LongType), StructField("text", StringType)))
+    for ((label, docs) <- cases; buckets <- Seq(1, 7, 32)) {
+      val df = spark.createDataFrame(
+        spark.sparkContext.parallelize(docs.map { case (id, t) => Row(id, t) }, 3), input)
+      val got = CorpusOps.packChunks(df, "text", "doc_id", chunkTokens = 4, buckets = buckets)
+      assert(got.schema.map(f => f.copy(nullable = true)) == schema, s"$label: ${got.schema}")
+      assert(got.collect().toSet == oracle(docs, 4), s"$label, buckets=$buckets")
     }
   }
 

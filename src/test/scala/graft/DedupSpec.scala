@@ -69,6 +69,30 @@ class DedupSpec extends SparkTestBase {
     }
   }
 
+  test("prefix and inverted plans equal the oracle on repeated windows and identical texts") {
+    // windows repeating inside one doc, and the same texts under distinct
+    // ids: the (id, shingle) rows must count each window once per doc
+    val tricky = Seq(
+      1L -> "a b c a b c a b c", 2L -> "a b c a b c a b c", 3L -> "a b c a b c",
+      4L -> "a b c a b d", 5L -> "c a b c a b c", 6L -> "x y z x y z",
+      7L -> "x y z w", 8L -> "a a a a a", 9L -> "a a a a", 10L -> "a a a a a")
+    val df = tricky.toDF("doc_id", "text")
+    def scored(d: org.apache.spark.sql.DataFrame) =
+      d.select($"id_a", $"id_b", round($"jaccard" * 10000).cast("long"))
+        .as[(Long, Long, Long)].collect().toSet
+    for (t <- Seq(0.4, 0.6, 0.8, 1.0)) {
+      val exp = (for {
+        (ia, ta) <- tricky; (ib, tb) <- tricky
+        j = jaccard(ta, tb, 3) if ia < ib && j >= t
+      } yield (ia, ib, math.round(j * 10000))).toSet
+      assert(scored(Dedup.ngramJaccardPairsPrefix(df, "text", "doc_id", 3, t, 100000)) == exp,
+        s"prefix plan at t=$t")
+      assert(scored(Dedup.ngramJaccardPairsInverted(df, "text", "doc_id", 3, t, 100000)) == exp,
+        s"inverted plan at t=$t")
+      assert(exp.contains((1L, 2L, 10000L)))
+    }
+  }
+
   test("minhash-verify low-t plan: exact precision, banding recall vs inverted plan") {
     // the low-threshold dispatch target: candidates from r=1/b=64 banded
     // MinHash, verify exact. Precision is exact by construction; recall on

@@ -203,6 +203,13 @@ class TextKernelSpec extends SparkTestBase {
     check(Prop.forAllNoShrink(strArrays)(as => agree(StrArr, as, TextExpressions.simhash60(x), oldSimhash(x))))
   }
 
+  test("shingle-hash kernel equals hash60 per element, null elements left out") {
+    check(Prop.forAllNoShrink(strArrays) { as =>
+      agree(StrArr, as, TextExpressions.hashes60(x),
+        filter(transform(x, s => Dedup.hash60(s)), h => h.isNotNull))
+    })
+  }
+
   /** ±m/128 scales to an exact half (1/128 · 10^6 = 7812.5): the rounding
     * mode shows there. */
   private val floats: Gen[java.lang.Float] = Gen.frequency(
